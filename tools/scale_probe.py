@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Scale-slope probe: does each expensive query's wall time grow linearly
-with data volume on a fixed 32-core executor?
+with data volume on a fixed-width executor (``local[$SPARK_GRAFT_CPUS]``)?
 
 The plan-shape arguments in SCALE.md claim every query survives a 100x
 scale-up; this tool MEASURES the claim on the slice that fits locally.
@@ -104,6 +104,18 @@ APPLY_MEMO_ENTRIES = frozenset(
         "ann_recall_report",
     }
 )
+
+
+def waves(k: int, cpus: int) -> int:
+    """Task waves for ``k`` equal tasks on ``cpus`` slots: ceil(k/cpus)."""
+    return -(-k // max(1, cpus))
+
+
+def cal_ratio(cal: dict[int, float], k_lo: int, k_hi: int) -> float:
+    """Per-wave calibration growth from scale ``k_lo`` to ``k_hi``: the
+    box's width slowdown a one-wave query's ratio is divided by (never
+    below 1 — a calibration that got faster does not inflate ratios)."""
+    return max(1.0, cal[k_hi] / cal[k_lo]) if cal.get(k_lo) else 1.0
 
 
 def _clear_model_memos():
@@ -215,8 +227,9 @@ def run_probe(scales, names, repeats: int = 2) -> dict:
     from clickhouse_github_log_importer_spark.plans.queries import REGISTRY
     from clickhouse_github_log_importer_spark.session import get_spark
 
-    # local-mode driver hosts all 32 executor threads: the default 1g heap
-    # OOMs on the x30 shuffles, give it a real allocation (box has 128 GiB)
+    # local-mode driver hosts every executor thread: the default 1g heap
+    # OOMs on the x30 shuffles, give it a real allocation (the 48g default
+    # assumes a 128 GiB host; set PROBE_DRIVER_MEM lower on smaller ones)
     spark = get_spark(
         app_name="scale_probe",
         extra_conf={"spark.driver.memory": os.environ.get("PROBE_DRIVER_MEM", "48g")},
@@ -250,16 +263,21 @@ def run_probe(scales, names, repeats: int = 2) -> dict:
     loads: list[float] = []
 
     # Parallel-width calibration: the probe data carries k splits at
-    # scale xk, so a single-wave stage runs k concurrent tasks. On this
-    # VM, FIXED per-task work measurably slows as concurrency rises
-    # (measured: 1.0s at 10 tasks -> 2.0s at 30 tasks for identical 2M-md5
-    # tasks — effective width ~half the advertised 32 vCPUs). Without
-    # correction, any query whose wall is one task wave reads as
-    # "super-linear" purely because x30 runs wider waves than x10.
-    # cal[k] = wall of k identical CPU-bound tasks; verdicts divide the
-    # measured growth ratio by cal[k3]/cal[k2].
+    # scale xk, so a stage runs k concurrent tasks. FIXED per-task work
+    # measurably slows as concurrency rises (measured on a 32-vCPU VM:
+    # 1.0s at 10 tasks -> 2.0s at 30 tasks for identical 2M-md5 tasks —
+    # effective width ~half the advertised vCPUs). Without correction,
+    # any query whose wall is one task wave reads as "super-linear"
+    # purely because x30 runs wider waves than x10.
+    # cal[k] = wall of k identical CPU-bound tasks divided by their wave
+    # count ceil(k/cpus): the cost of ONE wave at width min(k, cpus).
+    # With k > cpus the raw wall also counts the extra waves, i.e. the
+    # k-fold work itself, and would divide the very growth the verdict
+    # judges out of every ratio. Verdicts divide the measured growth
+    # ratio by cal[k3]/cal[k2].
     from pyspark.sql import functions as _F
 
+    cpus = spark.sparkContext.defaultParallelism
     cal: dict[int, float] = {}
     for k in scales:
         best = None
@@ -270,8 +288,9 @@ def run_probe(scales, names, repeats: int = 2) -> dict:
             ).select(_F.max("h")).collect()
             dt = time.monotonic() - t0
             best = dt if best is None else min(best, dt)
-        cal[k] = round(best, 3)
-    print(f"# parallel-width calibration (k tasks, fixed per-task work): {cal}")
+        cal[k] = round(best / waves(k, cpus), 3)
+    print(f"# parallel-width calibration (k tasks, fixed per-task work, "
+          f"per wave at {cpus} cpus): {cal}")
     # untimed warm pass at the smallest scale: codegen/JIT + python-worker
     # pools + model memos warm up OUTSIDE the timed columns, so x1 does
     # not absorb every first-run cost and skew the slope downward
@@ -339,8 +358,7 @@ def run_probe(scales, names, repeats: int = 2) -> dict:
         # divide out the box's measured wave-width slowdown (cal): a
         # query whose wall is one k-task wave inflates by cal[k3]/cal[k2]
         # on identical per-task work, which is the machine, not the plan
-        cal_ratio = max(1.0, cal[k3] / cal[k2]) if cal.get(k2) else 1.0
-        ratio_adj = ratio / cal_ratio
+        ratio_adj = ratio / cal_ratio(cal, k2, k3)
         if ratio_adj > lin * 1.35 and ts[k3] > 1.0:
             verdict = "super-linear"
         elif ratio < lin * 0.65:
@@ -372,9 +390,13 @@ def run_probe(scales, names, repeats: int = 2) -> dict:
             # row records WHEN and against WHICH commit it was measured
             "probed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             "commit": _git_head(),
+            # verdicts shift with executor width: never compare rows
+            # measured at different cpus
+            "cpus": cpus,
         }
     return {
         "scales": scales,
+        "cpus": cpus,
         "src": SRC,
         "queries": report,
         "errors": errors,
