@@ -23,7 +23,6 @@ correctness runs where the session ends soon after.
 
 from __future__ import annotations
 
-import os
 import threading
 from contextlib import contextmanager
 
@@ -112,29 +111,20 @@ def persist_in(scope: CacheScope | None, df: DataFrame) -> DataFrame:
     return scope.persist(df) if scope is not None else df.persist()
 
 
-#: how multi-consumer chain intermediates materialize (r13, guide §5):
-#: ``checkpoint`` (default) = lazy ``localCheckpoint`` — truncates the
-#: LOGICAL plan, so every later transformation's eager analysis, the
-#: optimizer run at action time, and each consuming branch walk a leaf
-#: instead of the full upstream tree (measured on the 4-step compiled
-#: chain at sf0.1: build 0.87 -> 0.61 s, execute 2.99 -> 1.93 s vs a
-#: persisted base). The trade is mid-query fault tolerance: a lost
-#: executor fails the query instead of recomputing the lost partitions
-#: — ClickHouse's own posture (a replica loss fails the query), and the
-#: cached-intermediate fallback it replaces was already partial (cache
-#: eviction silently recomputes). ``persist`` restores the r12 behavior
-#: for deployments that want lineage-backed recovery on long chains.
-_MATERIALIZE_MODE = os.environ.get("SPARK_GRAFT_CHAIN_MATERIALIZE", "checkpoint")
-
-
 def checkpoint_in(scope: CacheScope | None, df: DataFrame) -> DataFrame:
     """Materialization point for a multi-consumer chain intermediate:
     lazy ``localCheckpoint`` registered with the (explicit or ambient)
-    scope — or a plain :func:`persist_in` under
-    ``SPARK_GRAFT_CHAIN_MATERIALIZE=persist``. Lazy: the first consuming
-    job materializes the blocks; until then nothing executes."""
-    if _MATERIALIZE_MODE == "persist":
-        return persist_in(scope, df)
+    scope. Lazy: the first consuming job materializes the blocks; until
+    then nothing executes.
+
+    A checkpoint truncates the LOGICAL plan, so every later
+    transformation's eager analysis, the optimizer run at action time,
+    and each consuming branch walk a leaf instead of the full upstream
+    tree (measured on the 4-step compiled chain at sf0.1: build 0.87 ->
+    0.61 s, execute 2.99 -> 1.93 s vs a persisted base). The trade is
+    mid-query fault tolerance: a lost executor fails the query instead
+    of recomputing the lost partitions — ClickHouse's own posture (a
+    replica loss fails the query)."""
     out = df.localCheckpoint(eager=False)
     if scope is None:
         scope = ambient_scope()

@@ -51,8 +51,8 @@ from pyspark.sql import functions as F
 #: a slice id must merely be a deterministic monotone function of the
 #: order key for the carry algebra to hold (pytest-pinned slice
 #: invariance), so even a hash collision or a stale serve cannot change
-#: a query's output, only its task sizing. Entries are dropped when the
-#: application changes; `clear_bounds_memo()` resets for probes/tests.
+#: a query's output, only its task sizing. Entries of any other application
+#: are dropped on insert; `clear_bounds_memo()` resets for probes/tests.
 _BOUNDS_MEMO: dict[tuple, list[float]] = {}
 
 
@@ -103,6 +103,9 @@ def slice_bounds(
         return _BOUNDS_MEMO[key]
     out = sorted(set(probe.approxQuantile("_b", qs, 0.001)))
     if key is not None:
+        # a finished application's boundaries can never be served again
+        for k in [k for k in _BOUNDS_MEMO if k[0] != key[0]]:
+            _BOUNDS_MEMO.pop(k, None)
         _BOUNDS_MEMO[key] = out
     return out
 

@@ -1,7 +1,7 @@
 """ClickHouse-EXACT backtracking sequenceCount (r11).
 
-The greedy timed automata (`plans/queries.py`:
-``_sequence_count_timed_users`` and the timed-adjacency product
+The greedy timed automata (`operators/sequence.py`:
+``_sequence_count_timed_multi`` and the timed-adjacency product
 automaton) pin a deterministic lock/restart/wait scan — a documented
 deviation from ClickHouse's matcher, which BACKTRACKS
 (``AggregateFunctionSequenceMatch.h``: a ``back_stack`` of
@@ -82,30 +82,20 @@ def compile_backtracking(pattern: str, conds, semantics: str = "clickhouse"):
     the declared stream, ("any",) any intervening declared events, or
     (op, T_us) with op in '<' / '>' / '==' (<= / >= reduced exactly on
     integer microseconds, same rule as the greedy automata)."""
-    from ..plans.queries import _parse_seq_pattern
+    from .sequence import _cond_types, _parse_seq_pattern, _strict_edge
 
     if semantics not in BACKTRACK_SEMANTICS:
         raise ValueError(
             f"unknown semantics {semantics!r}; one of {BACKTRACK_SEMANTICS}"
         )
     steps, edges, adjacent = _parse_seq_pattern(pattern, with_adjacency=True)
-    bad = [i for i in steps if i > len(conds)]
-    if bad:
-        raise ValueError(
-            f"sequenceMatch pattern: condition index (?{bad[0]}) out of "
-            f"range — {len(conds)} conditions defined"
-        )
-    types = tuple(conds[i - 1] for i in steps)
+    types = tuple(_cond_types(steps, conds))
     gaps = []
     for e, adj in zip(edges, adjacent):
         if e is None:
             gaps.append(("adj",) if semantics == "clickhouse" and adj else ("any",))
-        elif e[0] == "<=":
-            gaps.append(("<", e[1] + 1))
-        elif e[0] == ">=":
-            gaps.append((">", e[1] - 1))
         else:
-            gaps.append(e)
+            gaps.append(_strict_edge(e))
     return types, tuple(gaps)
 
 
@@ -479,7 +469,7 @@ def bt_count_final(code, tsv, type_codes, gaps, wm_us=None):
 
 def greedy_count_timed_py(et, ts, types, edges) -> int:
     """Pure-python twin of the PINNED greedy timed-restart automaton
-    (_sequence_count_timed_users docstring rules: '<' violation
+    (_sequence_count_timed_multi docstring rules: '<' violation
     restarts re-anchoring, '>' violation waits, '==' composes) — the
     fuzzer's greedy side for characterizing greedy-vs-backtracking
     divergence without a Spark round trip. Existence reading: only

@@ -32,6 +32,18 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import ranking as RK
+from ..operators.sequence import (
+    _adjt_lag_depths,
+    _parse_seq_pattern,
+    _restart_dfa,
+    _seq_count_dfa,
+    _seq_count_dfa_meta,
+    _seq_count_sliced_base,
+    _sequence_count_adjacent_timed_multi,
+    _sequence_count_battery_fused,
+    _sequence_count_timed_multi,
+    _strict_edge,
+)
 
 TABLES = (
     "region",
@@ -8474,91 +8486,6 @@ def sequence_match_min_gap(spark, sf_dir):
 # the general form the r6 verdict asked for.
 # ---------------------------------------------------------------------------
 
-def _parse_seq_pattern(pattern: str, with_adjacency: bool = False):
-    """Compile a ClickHouse sequenceMatch pattern string into
-    (steps, edges): ``steps`` is the 1-based condition index per chain
-    position; ``edges[i]`` is the time constraint between step i+1 and
-    step i+2 — None (unconstrained) or (op, T_us) with op one of
-    '<', '>', '<=', '>=', '==' (the full ClickHouse operator set).
-    With ``with_adjacency=True`` also returns ``adjacent``:
-    ``adjacent[i]`` is True iff NO separator token ('.*' or a time
-    constraint) appeared between step i+1 and step i+2 — the
-    ClickHouse-exact reading where a bare '(?1)(?2)' requires the two
-    events to be CONSECUTIVE in the condition-matching event stream
-    (time constraints consume intervening events like '.*' does:
-    AggregateFunctionSequenceMatch.h treats (?t..) as KleeneStar plus
-    a time check).
-
-    Grammar (reference: ClickHouse docs/en/sql-reference/
-    aggregate-functions/parametric-functions#sequencematch):
-      (?N)      match condition N
-      (?t<T) / (?t<=T) / (?t>T) / (?t>=T) / (?t==T)
-                gap (seconds) between the two adjacent steps
-      .*        any number of intervening events — a NO-OP under the
-                existence semantics the compiled family pins (an
-                intervening event never breaks a chain), but meaningful
-                under adjacency semantics (see sequence_match_adjacent)
-    A time constraint must sit between two steps; two constraints on
-    one edge, a leading/trailing constraint, or any unrecognized token
-    raise ValueError.
-    """
-    import re
-
-    tok = re.compile(r"\(\?t(<=|>=|==|<|>)(\d+)\)|\(\?(\d+)\)|(\.\*)")
-    pos = 0
-    steps: list[int] = []
-    edges: list[tuple[str, int] | None] = []
-    adjacent: list[bool] = []
-    pending: tuple[str, int] | None = None
-    pending_set = False
-    sep_seen = False
-    while pos < len(pattern):
-        m = tok.match(pattern, pos)
-        if not m:
-            raise ValueError(
-                f"sequenceMatch pattern: unrecognized token at {pos}: "
-                f"{pattern[pos:pos + 12]!r}"
-            )
-        op, tval, n, dotstar = m.groups()
-        if n is not None:
-            if int(n) < 1:
-                raise ValueError(
-                    "sequenceMatch pattern: condition indexes are "
-                    f"1-based, got (?{int(n)})"
-                )
-            if steps:
-                edges.append(pending)
-                adjacent.append(not sep_seen)
-            pending, pending_set, sep_seen = None, False, False
-            steps.append(int(n))
-        elif op is not None:
-            if not steps:
-                raise ValueError(
-                    "sequenceMatch pattern: time constraint before any step"
-                )
-            if pending_set:
-                raise ValueError(
-                    "sequenceMatch pattern: two time constraints on one edge"
-                )
-            pending = (op, int(tval) * 1_000_000)
-            pending_set = True
-            sep_seen = True
-        elif dotstar is not None:
-            # no-op under existence semantics; a separator under adjacency
-            sep_seen = True
-        pos = m.end()
-    if pending_set:
-        raise ValueError(
-            "sequenceMatch pattern: trailing time constraint with no "
-            "following step"
-        )
-    if not steps:
-        raise ValueError("sequenceMatch pattern: no steps")
-    if with_adjacency:
-        return steps, edges, adjacent
-    return steps, edges
-
-
 def _seq_running(df, use_min: bool):
     """One segmented running-extrema pass over the per-(event, step)
     stream: adds ``_G`` = running min/max of ``_q`` over strictly-earlier
@@ -9331,160 +9258,6 @@ def sequence_match_adjacent(spark, sf_dir):
     return out
 
 
-def _sequence_count_users(
-    spark, sf_dir, pattern: str, conds=_SEQ_CONDS, events=None,
-    _sliced=None,
-):
-    """Per-user GREEDY NON-OVERLAPPING match counts for an unconstrained
-    pattern — ClickHouse sequenceCount's restart semantics
-    (AggregateFunctionSequenceMatch.h countAll): one automaton scans the
-    user's events in time order, advancing on the expected condition and
-    restarting at state 0 after each completed chain. That differs from
-    maximum matching — for signup signup purchase purchase,
-    '(?1)(?3)' counts ONE chain (the second signup is consumed-skipped
-    while seeking the first purchase), where the parenthesis-matching
-    form (sequence_pair_count) pairs two.
-
-    The fold looks inherently serial per user, but the automaton's
-    transition across a time slice is a pure function
-    f: entry_state -> (exit_state, completed_count) over the K pattern
-    states, and function composition is associative. So: composite
-    (user, ts) slices; per (slice, user) ONE Arrow batch tabulates f by
-    running the automaton from each of the K entry states (a match-jump
-    loop over numpy index arrays — O(advances) cheap steps, slice-
-    bounded); per user the <= n_slices function rows fold in slice
-    order. Bounded state everywhere: K (exit, delta) pairs per
-    (slice, user), <= n_slices rows per user at the fold — the
-    applyInPandas shape the brief prescribes for operators DataFrame
-    algebra can't express. Tie order pinned (ts, event_id) in BOTH
-    engines (ClickHouse declares same-second order undefined).
-
-    Time-constrained edges raise: restart-automaton state would carry
-    the anchor timestamp (unbounded function domain, not tabulable);
-    the existence-semantics compiler (_sequence_match_users) covers
-    constrained patterns."""
-    import pandas as pd
-
-    from ..operators.ranking import composite_slice_key, slice_expr
-
-    steps, edges = _parse_seq_pattern(pattern)
-    if any(e is not None for e in edges):
-        raise ValueError(
-            "sequence_count_compiled: time-constrained edges are not "
-            "supported under restart semantics (state would carry "
-            "timestamps); use the existence-semantics compiler"
-        )
-    bad = [i for i in steps if i > len(conds)]
-    if bad:
-        raise ValueError(
-            f"sequenceMatch pattern: condition index (?{bad[0]}) out of "
-            f"range — {len(conds)} conditions defined"
-        )
-    types = [conds[i - 1] for i in steps]
-    k_states = len(types)
-    if _sliced is not None:
-        # entry-shared pattern-independent sliced base (r12: the same
-        # hoist the timed battery got in r9 — one scan + one quantile
-        # job for the whole battery; composite slices are contiguous
-        # key ranges, so any per-pattern type subset stays contiguous)
-        st = _sliced.filter(F.col("event_type").isin(*set(types)))
-    else:
-        ev = (
-            t(spark, sf_dir, "events") if events is None else events
-        ).select(
-            "user_id",
-            F.col("ts_us").cast("long").alias("ts_us"),
-            "event_id",
-            "event_type",
-        )
-        ev = ev.filter(F.col("event_type").isin(*set(types)))
-        n_slices = spark.sparkContext.defaultParallelism
-        st = ev.withColumn(
-            "_sl",
-            slice_expr(
-                ev, composite_slice_key("user_id", "ts_us"), n_slices
-            ),
-        )
-
-    # tabulate per SLICE (n_slices Arrow groups, not one per
-    # (slice, user) — per-group Arrow overhead at user cardinality was
-    # measured 10.8 s at sf0.1; batching by slice with numpy group
-    # boundaries inside cut it ~5x): each group emits one
-    # (user, exits[K], deltas[K]) function row per user in the slice
-    def tab(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        pdf = pdf.sort_values(
-            ["user_id", "ts_us", "event_id"], kind="mergesort"
-        )
-        uid = pdf["user_id"].to_numpy()
-        et = pdf["event_type"].to_numpy()
-        starts = np.flatnonzero(np.r_[True, uid[1:] != uid[:-1]])
-        ends = np.r_[starts[1:], len(uid)]
-        out_u, out_e, out_d = [], [], []
-        for a, b in zip(starts, ends):
-            sub = et[a:b]
-            pos = {tn: np.flatnonzero(sub == tn) for tn in set(types)}
-            exits, deltas = [], []
-            for entry in range(k_states):
-                s, cnt, p = entry, 0, -1
-                while True:
-                    arr = pos[types[s]]
-                    j = int(np.searchsorted(arr, p, side="right"))
-                    if j >= len(arr):
-                        break
-                    p = int(arr[j])
-                    s += 1
-                    if s == k_states:
-                        cnt += 1
-                        s = 0
-                exits.append(s)
-                deltas.append(cnt)
-            out_u.append(int(uid[a]))
-            out_e.append(exits)
-            out_d.append(deltas)
-        sl = int(pdf["_sl"].iloc[0]) if len(pdf) else 0
-        return pd.DataFrame(
-            {
-                "user_id": out_u,
-                "_sl": [sl] * len(out_u),
-                "exits": out_e,
-                "deltas": out_d,
-            }
-        )
-
-    funcs = RK.grouped_kernel(
-        st,
-        ["_sl"],
-        tab, "user_id long, _sl int, exits array<int>, deltas array<long>"
-    )
-
-    # per-user composition: fold the <= n_slices function rows in slice
-    # order — pure DataFrame HOF fold over the (bounded) collected
-    # array, no second Arrow stage; acc = (state, count)
-    folded = funcs.groupBy("user_id").agg(
-        F.sort_array(
-            F.collect_list(F.struct("_sl", "exits", "deltas"))
-        ).alias("_fs")
-    )
-    state = F.aggregate(
-        F.col("_fs"),
-        F.struct(
-            F.lit(0).alias("s"), F.lit(0).cast("long").alias("c")
-        ),
-        lambda acc, x: F.struct(
-            F.element_at(x["exits"], acc["s"] + 1).alias("s"),
-            (acc["c"] + F.element_at(x["deltas"], acc["s"] + 1)).alias(
-                "c"
-            ),
-        ),
-    )
-    counts = folded.select(
-        "user_id", state["c"].alias("seq_count")
-    )
-    return counts.filter(F.col("seq_count") >= 1)
-
-
 _SEQ_COUNT_PATTERNS = ("(?1)(?2)(?3)", "(?1)(?3)")
 
 
@@ -9560,8 +9333,8 @@ def _seq_count_oracle() -> str:
     "(pytest-pinned on that fixture). Implementation: the serial fold "
     "becomes associative FUNCTION COMPOSITION — per composite "
     "(user, ts) slice one Arrow batch tabulates entry-state -> "
-    "(exit-state, matches) by running the K-state automaton from every "
-    "entry state (numpy index-jump loop, slice-bounded); per user the "
+    "(exit-state, matches) by advancing the restart DFA's whole state "
+    "vector one gather per event (slice-bounded); per user the "
     "<= n_slices function rows fold in slice order (bounded state, the "
     "applyInPandas shape the brief prescribes). Oracle: one recursive "
     "CTE per pattern stepping the same automaton one advance per "
@@ -9581,516 +9354,18 @@ def sequence_count_compiled(spark, sf_dir):
         for pat in _SEQ_COUNT_PATTERNS
         for i in _parse_seq_pattern(pat)[0]
     }
+    ev = t(spark, sf_dir, "events")
     base = checkpoint_in(
         rotating_scope("sequence_count_compiled"),
-        _seq_count_sliced_base(spark, sf_dir, union_types),
+        _seq_count_sliced_base(ev, union_types),
     )
     # r12: the existence battery rides the same block-diagonal fused
     # kernel as the adjacency battery (its restart automaton IS a DFA)
     # — one kernel pass + one fold shuffle (was per-pattern x2, unioned)
     return _sequence_count_battery_fused(
-        spark, sf_dir, _SEQ_COUNT_PATTERNS, _sliced=base,
+        ev, _SEQ_COUNT_PATTERNS, _SEQ_CONDS, _sliced=base,
         dfa_of=_restart_dfa,
     )
-
-
-_SEQ_TIMED_SENT = -(2**62)  # t_prev sentinel; never compared at state 0
-
-
-def _sequence_count_timed_users(
-    spark, sf_dir, pattern: str, conds=_SEQ_CONDS, events=None,
-    _sliced=None,
-):
-    """Restart-semantics sequenceCount with ``(?t<T)`` / ``(?t>T)``
-    edges — the timed extension of :func:`_sequence_count_users`
-    (ClickHouse AggregateFunctionSequenceMatch.h countAll with time
-    constraints; semantic deltas pinned below).
-
-    Pinned timed-restart semantics (documented deviation — ClickHouse
-    matches with backtracking; we pin a deterministic greedy scan):
-    events scan per user in (ts, event_id) order; only events of the
-    currently-expected condition touch the automaton. At state s >= 1
-    whose inbound edge is ('<', T): an expected event at ``ts`` ADVANCES
-    iff ``ts - t_prev < T`` (strict); otherwise the partial chain is
-    dead — for an upper bound every later candidate is even later — so
-    the automaton RESTARTS at that event (state 0, re-anchoring to
-    state 1 iff the event's condition equals condition 1). At a state
-    whose inbound edge is ('>', T) the rule is WAIT-UNTIL-SATISFIED
-    (r9): an expected event with gap <= T is SKIPPED (state and carried
-    timestamp unchanged — a later candidate can only have a larger gap,
-    so waiting strictly dominates restarting), and the chain advances
-    at the first expected event with gap > T. At a state whose inbound
-    edge is ('==', T) the rule composes both (r10): an undershot
-    expected event (gap < T) WAITS, an overshot one (gap > T) RESTARTS
-    — the first expected event with gap >= T decides, locking on exact
-    equality. ``(?t<=T)`` reduces to ``(?t<T+1us)`` and ``(?t>=T)`` to
-    ``(?t>T-1us)`` exactly on integer-microsecond timestamps.
-
-    Why this still distributes: the per-slice transfer function has
-    domain (entry_state, carried t_prev), and is a STEP FUNCTION of
-    t_prev for every entry state — '<' entry states collapse at the
-    first expected event to one threshold (2 pieces); '>' entry states
-    have one piece per candidate first-advance event (the automaton
-    advances at the first expected event with ts > t_prev + T, so the
-    breakpoints are ts_j - T), plus a no-advance tail piece. Pieces
-    with identical (exit_state, exit_ts, delta) merge, so the row
-    carries the COMPRESSED breakpoint list; everything after the first
-    advance is concrete inside the slice. Composition stays an
-    associative fold over <= n_slices function rows per user
-    (acc = state, t_prev, count): each row picks its piece by counting
-    breaks below acc.t_prev (tiny array filter). A null exit timestamp
-    means "carry the entry t_prev through". Worst-case piece count for
-    a '>' entry state is the sub-segment's expected-event count —
-    bounded by the composite (user, ts) slice width, and compressed in
-    practice; same slice-level Arrow batching as the untimed entry."""
-    import pandas as pd
-
-    from ..operators.ranking import composite_slice_key, slice_expr
-
-    steps, edges = _parse_seq_pattern(pattern)
-    # inclusive operators reduce exactly on integer-microsecond
-    # timestamps: gap <= T <=> gap < T+1; gap >= T <=> gap > T-1 —
-    # pinned by the exact-gap boundary tests in
-    # tests/test_sequence_compiler.py
-    edges = [
-        ("<", e[1] + 1)
-        if e is not None and e[0] == "<="
-        else (">", e[1] - 1)
-        if e is not None and e[0] == ">="
-        else e
-        for e in edges
-    ]
-    for e in edges:
-        if e is not None and e[0] not in ("<", ">", "=="):
-            raise ValueError(  # unreachable after the <=/>= reduction
-                f"sequence_count_timed: (?t{e[0]}T) edges are not "
-                "pinned under restart semantics"
-            )
-    bad = [i for i in steps if i > len(conds)]
-    if bad:
-        raise ValueError(
-            f"sequenceMatch pattern: condition index (?{bad[0]}) out of "
-            f"range — {len(conds)} conditions defined"
-        )
-    types = [conds[i - 1] for i in steps]
-    k_states = len(types)
-    if _sliced is not None:
-        # shared pattern-independent sliced base (the entry persists ONE
-        # stream over the battery's type union — the r9 compiled-family
-        # hoist): slice ids stay valid under any per-pattern subset
-        # because composite slices are contiguous key ranges
-        st = _sliced.filter(F.col("event_type").isin(*set(types)))
-    else:
-        ev = (
-            t(spark, sf_dir, "events") if events is None else events
-        ).select(
-            "user_id",
-            F.col("ts_us").cast("long").alias("ts_us"),
-            "event_id",
-            "event_type",
-        )
-        ev = ev.filter(F.col("event_type").isin(*set(types)))
-        n_slices = spark.sparkContext.defaultParallelism
-        st = ev.withColumn(
-            "_sl",
-            slice_expr(
-                ev, composite_slice_key("user_id", "ts_us"), n_slices
-            ),
-        )
-
-    def tab(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        pdf = pdf.sort_values(
-            ["user_id", "ts_us", "event_id"], kind="mergesort"
-        )
-        uid = pdf["user_id"].to_numpy()
-        et = pdf["event_type"].to_numpy()
-        tsv = pdf["ts_us"].to_numpy()
-        starts = np.flatnonzero(np.r_[True, uid[1:] != uid[:-1]])
-        ends = np.r_[starts[1:], len(uid)]
-        cols: dict[str, list] = {
-            k: [] for k in ("user_id", "brk", "exs", "ext", "exd")
-        }
-        for a, b in zip(starts, ends):
-            sub = et[a:b]
-            sts = tsv[a:b]
-            pos = {tn: np.flatnonzero(sub == tn) for tn in set(types)}
-            brk, exs, ext, exd = _timed_transfer_pieces(
-                types, edges, k_states, sts, pos
-            )
-            cols["user_id"].append(int(uid[a]))
-            cols["brk"].append(brk)
-            cols["exs"].append(exs)
-            cols["ext"].append(ext)
-            cols["exd"].append(exd)
-        sl = int(pdf["_sl"].iloc[0]) if len(pdf) else 0
-        cols["_sl"] = [sl] * len(cols["user_id"])
-        return pd.DataFrame(cols)
-
-    funcs = RK.grouped_kernel(
-        st,
-        ["_sl"],
-        tab,
-        "user_id long, brk array<array<long>>, exs array<array<int>>, "
-        "ext array<array<long>>, exd array<array<long>>, _sl int",
-    )
-    return _piecewise_fold_counts(funcs)
-
-
-def _timed_transfer_pieces(types, edges, k_states, sts, pos):
-    """One user's piecewise transfer function of the timed restart
-    automaton over one slice — extracted (r12) so the FUSED battery
-    kernel (:func:`_sequence_count_timed_multi`) shares it with the
-    single-pattern path. ``sts`` = the user's slice timestamps in scan
-    order; ``pos`` = per-type positions into that order (it may index
-    MORE types than the pattern touches — the construction only ever
-    reads ``pos[expected type]``, so extra rows are invisible to it).
-    Returns the compressed per-entry-state piece table
-    (brk, exs, ext, exd) documented in _sequence_count_timed_users."""
-    import numpy as np
-
-    def run(p, s, t_prev):
-        # concrete scan from after index p; t_prev concrete.
-        # '<' violated (or '==' overshot) -> restart at the
-        # event (re-anchor iff its condition is condition 1);
-        # '>' violated (or '==' undershot) -> SKIP the event
-        # and keep waiting (r9/r10).
-        cnt = 0
-        while True:
-            arr = pos[types[s]]
-            j = int(np.searchsorted(arr, p, side="right"))
-            if j >= len(arr):
-                return s, t_prev, cnt
-            i = int(arr[j])
-            e = edges[s - 1] if s >= 1 else None
-            gap = int(sts[i]) - t_prev
-            if (
-                e is None
-                or (e[0] == "<" and gap < e[1])
-                or (e[0] == ">" and gap > e[1])
-                or (e[0] == "==" and gap == e[1])
-            ):
-                s += 1
-                t_prev = int(sts[i])
-                if s == k_states:
-                    cnt += 1
-                    s = 0
-            elif e[0] == "<" or (e[0] == "==" and gap > e[1]):
-                # dead chain: restart at event
-                if types[s] == types[0]:
-                    s, t_prev = 1, int(sts[i])
-                    if k_states == 1:
-                        cnt += 1
-                        s = 0
-                else:
-                    s = 0
-            # else too early: wait (state, t_prev unchanged)
-            p = i
-
-    def advance_from(entry, j0):
-        # outcome of ADVANCING out of `entry` at event index j0
-        s_hi, t_hi = entry + 1, int(sts[j0])
-        c_hi = 0
-        if s_hi == k_states:
-            c_hi, s_hi = 1, 0
-        s1, t1, c1 = run(j0, s_hi, t_hi)
-        return s1, t1, c_hi + c1
-
-    def restart_from(entry, j0):
-        # outcome of a dead-chain RESTART at event index j0
-        # (re-anchor iff its condition equals condition 1)
-        if types[entry] == types[0]:
-            s_lo, t_lo, c_lo = 1, int(sts[j0]), 0
-            if k_states == 1:
-                c_lo, s_lo = 1, 0
-        else:
-            s_lo, t_lo, c_lo = 0, _SEQ_TIMED_SENT, 0
-        s2, t2, c2 = run(j0, s_lo, t_lo)
-        return s2, t2, c_lo + c2
-
-    # per entry state: a step function of entry t_prev —
-    # pieces[i] applies when exactly i breaks are < t_prev
-    # (breaks ascending); each piece = (exit_s, exit_ts, delta)
-    brk: list = []
-    exs: list = []
-    ext: list = []
-    exd: list = []
-    for entry in range(k_states):
-        e = edges[entry - 1] if entry >= 1 else None
-        arr = pos[types[entry]]
-        if len(arr) == 0:
-            # no touch: identity — carry entry t_prev through
-            brk.append([])
-            exs.append([entry]); ext.append([None]); exd.append([0])
-            continue
-        if e is None:
-            # first advance unconditional; concrete after it
-            s1, t1, c1 = run(-1, entry, _SEQ_TIMED_SENT)
-            brk.append([])
-            exs.append([s1]); ext.append([t1]); exd.append([c1])
-            continue
-        if e[0] == "<":
-            # one threshold at the first expected event:
-            # advance iff t_prev > ts0 - T, else restart there
-            j0 = int(arr[0])
-            pieces = [
-                restart_from(entry, j0),  # t_prev <= ts0 - T
-                advance_from(entry, j0),  # t_prev > ts0 - T
-            ]
-            breaks = [int(sts[j0]) - e[1]]
-        elif e[0] == "==":
-            # exact offset (r10): scanning expected events in
-            # order, the FIRST with gap >= T decides — lock on
-            # equality, restart past it, wait below. Pieces
-            # alternate restart intervals with single-point
-            # locks at t_prev == ts_j - T (integer micros make
-            # the point the interval (ts_j-T-1, ts_j-T]); the
-            # tail (every event too early) waits out the slice.
-            # Equal-ts runs collapse to their first event.
-            uniq: list = []
-            for j0 in arr:
-                if not uniq or int(sts[int(j0)]) != uniq[-1][1]:
-                    uniq.append((int(j0), int(sts[int(j0)])))
-            pieces = []
-            breaks = []
-            for j0, ts0 in uniq:
-                pieces.append(restart_from(entry, j0))
-                breaks.append(ts0 - e[1] - 1)
-                pieces.append(advance_from(entry, j0))
-                breaks.append(ts0 - e[1])
-            pieces.append((entry, None, 0))
-        else:
-            # '>' wait-until-satisfied: the automaton advances
-            # at the FIRST expected event with ts > t_prev + T,
-            # i.e. piece j (advance at arr[j]) applies for
-            # ts_{j-1} - T <= t_prev < ts_j - T; the tail piece
-            # (t_prev >= ts_last - T) never advances in-slice.
-            # Breaks ts_j - T - 1 make "< ts_j - T" exact under
-            # the "breaks strictly below t_prev" selector on
-            # integer micros.
-            pieces = [
-                advance_from(entry, int(j0)) for j0 in arr
-            ]
-            pieces.append((entry, None, 0))  # wait out the slice
-            breaks = [int(sts[int(j0)]) - e[1] - 1 for j0 in arr]
-        # compress: merge adjacent pieces with equal outcomes
-        cb: list = []
-        cp: list = [pieces[0]]
-        for bval, piece in zip(breaks, pieces[1:]):
-            if piece == cp[-1]:
-                continue
-            cb.append(bval)
-            cp.append(piece)
-        brk.append(cb)
-        exs.append([p_[0] for p_ in cp])
-        ext.append([p_[1] for p_ in cp])
-        exd.append([p_[2] for p_ in cp])
-    return brk, exs, ext, exd
-
-
-def _sequence_count_timed_multi(
-    spark, sf_dir, patterns, conds=_SEQ_CONDS, _sliced=None
-):
-    """The timed count battery FUSED (r12, guide §1.2/§2.4): ONE
-    applyInPandas pass over the shared sliced base computes every
-    pattern's per-(slice, user) transfer function — the kernel sort and
-    the per-type position index are built once per user instead of once
-    per user PER pattern — and ONE (pattern, user) fold shuffle
-    replaces |patterns| separate fold jobs. Per-(pattern, user)
-    transfer rows are bit-identical to the single-pattern path
-    (:func:`_timed_transfer_pieces` only reads the expected types'
-    positions, so the union stream's extra rows are invisible), and a
-    user with no events of a pattern's types folds to count 0 and is
-    filtered exactly as the per-pattern filter dropped them before."""
-    import pandas as pd
-
-    metas = []
-    for pat in patterns:
-        steps, edges = _parse_seq_pattern(pat)
-        edges = [
-            ("<", e[1] + 1)
-            if e is not None and e[0] == "<="
-            else (">", e[1] - 1)
-            if e is not None and e[0] == ">="
-            else e
-            for e in edges
-        ]
-        for e in edges:
-            if e is not None and e[0] not in ("<", ">", "=="):
-                raise ValueError(  # unreachable after the <=/>= reduction
-                    f"sequence_count_timed: (?t{e[0]}T) edges are not "
-                    "pinned under restart semantics"
-                )
-        bad = [i for i in steps if i > len(conds)]
-        if bad:
-            raise ValueError(
-                f"sequenceMatch pattern: condition index (?{bad[0]}) out "
-                f"of range — {len(conds)} conditions defined"
-            )
-        types = [conds[i - 1] for i in steps]
-        metas.append((types, edges, len(types)))
-    all_types = sorted({tn for types, _, _ in metas for tn in types})
-    if _sliced is not None:
-        st = _sliced.filter(F.col("event_type").isin(*all_types))
-    else:
-        # finer slices than the per-pattern path (4x parallelism): the
-        # fused kernel runs every pattern's construction serially per
-        # slice task, so the straggler slice is |patterns|x heavier —
-        # splitting it restores the task packing the old 5-subtree
-        # union job got for free (measured 6.1 s -> see below at 1x)
-        st = _seq_count_sliced_base(
-            spark,
-            sf_dir,
-            all_types,
-            n_slices=4 * spark.sparkContext.defaultParallelism,
-        )
-
-    def tab(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        pdf = pdf.sort_values(
-            ["user_id", "ts_us", "event_id"], kind="mergesort"
-        )
-        uid = pdf["user_id"].to_numpy()
-        et = pdf["event_type"].to_numpy()
-        tsv = pdf["ts_us"].to_numpy()
-        starts = np.flatnonzero(np.r_[True, uid[1:] != uid[:-1]])
-        ends = np.r_[starts[1:], len(uid)]
-        sl = int(pdf["_sl"].iloc[0]) if len(pdf) else 0
-        cols: dict[str, list] = {
-            k: []
-            for k in ("_p", "user_id", "_sl", "brk", "exs", "ext", "exd")
-        }
-        # kernel-side sub-slicing (r12, the adjacency kernel's skew fix
-        # applied here): a '>'-gated wait chain costs O(width x comps)
-        # per entry state — quadratic in a hot user's in-slice width.
-        # Fixed-width blocks bound it to O(width x BLOCK); the
-        # piecewise fold composes blocks exactly like slices (composite
-        # ids keep (slice, block) order). Measured on the mega-user
-        # skew corpus: ratio 4.98 -> see SKEW_PROBE.json.
-        for a, b in zip(starts, ends):
-            for ca in range(int(a), int(b), _ADJT_BLOCK):
-                ce = min(ca + _ADJT_BLOCK, int(b))
-                sub = et[ca:ce]
-                sts = tsv[ca:ce]
-                pos = {tn: np.flatnonzero(sub == tn) for tn in all_types}
-                comp_sl = (
-                    sl * _ADJT_BLOCK_IDS + (ca - int(a)) // _ADJT_BLOCK
-                )
-                for pi, (types, edges, k_states) in enumerate(metas):
-                    brk, exs, ext, exd = _timed_transfer_pieces(
-                        types, edges, k_states, sts, pos
-                    )
-                    cols["_p"].append(pi)
-                    cols["user_id"].append(int(uid[a]))
-                    cols["_sl"].append(comp_sl)
-                    cols["brk"].append(brk)
-                    cols["exs"].append(exs)
-                    cols["ext"].append(ext)
-                    cols["exd"].append(exd)
-        return pd.DataFrame(cols)
-
-    funcs = RK.grouped_kernel(
-        st,
-        ["_sl"],
-        tab,
-        "_p int, user_id long, brk array<array<long>>, "
-        "exs array<array<int>>, ext array<array<long>>, "
-        "exd array<array<long>>, _sl long",
-    )
-    counts = _piecewise_fold_counts(funcs, keys=("_p", "user_id"))
-    pat_arr = F.array(*[F.lit(p) for p in patterns])
-    return counts.select(
-        F.element_at(pat_arr, F.col("_p") + 1).alias("pattern"),
-        "user_id",
-        F.col("seq_count").cast("long").alias("seq_count"),
-    )
-
-
-def _piecewise_fold_counts(funcs, keys=("user_id",)):
-    """Fold per-slice piecewise transfer-function rows (user_id, brk,
-    exs, ext, exd, _sl) into per-user match counts: acc = (state,
-    carried t_prev, count); per slice the piece index is the number of
-    breaks strictly below the carried t_prev (breaks ascending; tiny
-    compressed arrays, re-filtered per field — the operands are
-    lambda-variable fields, cheap under the HOF rule); a null exit
-    timestamp carries the entry t_prev through. Shared by
-    _sequence_count_timed_users and the timed-adjacency product
-    automaton (identical algebra, different transfer construction).
-    ``keys`` lets the fused battery fold every pattern's rows in ONE
-    shuffle keyed (pattern idx, user)."""
-    folded = funcs.groupBy(*keys).agg(
-        F.sort_array(
-            F.collect_list(F.struct("_sl", "brk", "exs", "ext", "exd"))
-        ).alias("_fs")
-    )
-
-    def _piece(x, acc, field):
-        idx = F.size(
-            F.filter(
-                F.element_at(x["brk"], acc["s"] + 1),
-                lambda bv: acc["t"] > bv,
-            )
-        )
-        return F.element_at(F.element_at(x[field], acc["s"] + 1), idx + 1)
-
-    state = F.aggregate(
-        F.col("_fs"),
-        F.struct(
-            F.lit(0).alias("s"),
-            F.lit(_SEQ_TIMED_SENT).cast("long").alias("t"),
-            F.lit(0).cast("long").alias("c"),
-        ),
-        lambda acc, x: F.struct(
-            _piece(x, acc, "exs").alias("s"),
-            F.coalesce(_piece(x, acc, "ext"), acc["t"]).alias("t"),
-            (acc["c"] + _piece(x, acc, "exd")).alias("c"),
-        ),
-    )
-    counts = folded.select(*keys, state["c"].alias("seq_count"))
-    return counts.filter(F.col("seq_count") >= 1)
-
-
-def _seq_count_sliced_base(
-    spark, sf_dir, all_types, events=None, with_bounds=False,
-    n_slices=None,
-):
-    """Pattern-independent sliced event stream the count batteries
-    share (the r9 compiled-family hoist applied to the count side):
-    one parquet scan + one slice-quantile job for the whole battery;
-    per-pattern machines filter to their own type subsets keeping the
-    shared slice ids (composite slices are contiguous key ranges, so
-    any subset remains contiguously sliced). Machines whose per-slice
-    kernels are super-linear in slice width (the timed-adjacency wait
-    chain) bound that KERNEL-SIDE with fixed-width _ADJT_BLOCK
-    sub-slices — the slice count here stays at defaultParallelism.
-
-    ``with_bounds=True`` additionally returns the quantile boundary
-    literals (r12, guide §1.2): per-pattern machines that build their
-    OWN slice/rank columns (the timed-adjacency LAG path) reuse them
-    instead of re-running a quantile job whose input lineage re-executes
-    this whole subtree — measured 3 quantile jobs -> 1 on
-    sequence_count_adjacent_timed."""
-    from ..operators.ranking import (
-        composite_slice_key,
-        slice_bounds,
-        slice_from_bounds,
-    )
-
-    ev = (t(spark, sf_dir, "events") if events is None else events).select(
-        "user_id",
-        F.col("ts_us").cast("long").alias("ts_us"),
-        "event_id",
-        "event_type",
-    )
-    ev = ev.filter(F.col("event_type").isin(*set(all_types)))
-    if n_slices is None:
-        n_slices = spark.sparkContext.defaultParallelism
-    key = composite_slice_key("user_id", "ts_us")
-    bounds = slice_bounds(ev, key, n_slices)
-    out = ev.withColumn("_sl", slice_from_bounds(key, bounds))
-    return (out, bounds) if with_bounds else out
 
 
 _SEQ_COUNT_TIMED_PATTERNS = (
@@ -10120,16 +9395,9 @@ def _seq_count_timed_oracle() -> str:
     selects = []
     for idx, pat in enumerate(_SEQ_COUNT_TIMED_PATTERNS):
         steps, edges = _parse_seq_pattern(pat)
-        # same integer-microsecond inclusive reductions as
-        # _sequence_count_timed_users (one rule, two engines)
-        edges = [
-            ("<", e[1] + 1)
-            if e is not None and e[0] == "<="
-            else (">", e[1] - 1)
-            if e is not None and e[0] == ">="
-            else e
-            for e in edges
-        ]
+        # the kernel's integer-microsecond inclusive reductions (one
+        # rule, two engines)
+        edges = [_strict_edge(e) for e in edges]
         types = [_SEQ_CONDS[i - 1] for i in steps]
         k = len(types)
         expected = " ".join(
@@ -10267,399 +9535,7 @@ def sequence_count_timed(spark, sf_dir):
     # persisted shared base; with a single consumer the persist itself
     # is pure overhead and is gone too)
     return _sequence_count_timed_multi(
-        spark, sf_dir, _SEQ_COUNT_TIMED_PATTERNS
-    )
-
-
-def _seq_count_dfa_meta(pattern: str, conds, allow_timed: bool = False):
-    """Compile an adjacency-aware sequenceCount pattern into the
-    leftmost-search counting DFA plus the word metadata the TIMED
-    product automaton needs: words = maximal runs of adjacent steps;
-    between words '.*' (or a time constraint — a constraint is a
-    separator, so every timed edge is a BETWEEN-WORD edge) searches;
-    within a word, mismatches fall back via the word's OWN KMP failure
-    function (earlier words are locked in — '.*' re-searches only the
-    current word).
-
-    Returns a dict with:
-      delta[q][a]   next state reading symbol ``a`` in state ``q``
-                    (0..L-1, L = total steps)
-      emit[q][a]    1 when that read completes the FINAL word
-      complete[q][a]  word index the read completes, else -1
-      w_start[j]    first state of word j;  wlen[j] its length
-      wedge[j]      inbound time edge of word j (None / (op, T_us),
-                    '<='/'>=' reduced to strict on integer micros)
-      wcont[j]      KMP continuation state after a FULL occurrence of
-                    word j is found but rejected (wait semantics):
-                    w_start[j] + prefix_function(full word)
-      w1c[a]        reprocessing symbol ``a`` from state 0 completes
-                    word 0 (single-symbol first word) — restart helper
-    With ``allow_timed=False`` any time edge raises (the untimed
-    entry's contract)."""
-    steps, edges, adjacent = _parse_seq_pattern(pattern, with_adjacency=True)
-    if not allow_timed and any(e is not None for e in edges):
-        raise ValueError(
-            "sequence_count_adjacent: time-constrained edges are not "
-            "pinned under adjacency counting; "
-            "sequence_count_adjacent_timed covers them"
-        )
-    bad = [i for i in steps if i > len(conds)]
-    if bad:
-        raise ValueError(
-            f"sequenceMatch pattern: condition index (?{bad[0]}) out of "
-            f"range — {len(conds)} conditions defined"
-        )
-    types = [conds[i - 1] for i in steps]
-    words: list[list[int]] = [[0]]
-    wedge: list[tuple[str, int] | None] = [None]
-    for k in range(1, len(steps)):
-        if adjacent[k - 1]:
-            if edges[k - 1] is not None:  # unreachable: timed => separator
-                raise ValueError("timed edge inside an adjacent word")
-            words[-1].append(k)
-        else:
-            words.append([k])
-            e = edges[k - 1]
-            # strict reductions exact on integer-microsecond timestamps
-            if e is not None and e[0] == "<=":
-                e = ("<", e[1] + 1)
-            elif e is not None and e[0] == ">=":
-                e = (">", e[1] - 1)
-            wedge.append(e)
-    sym = {c: a for a, c in enumerate(conds)}
-    L = len(steps)
-    A = len(conds)
-    delta = [[0] * A for _ in range(L)]
-    emit = [[0] * A for _ in range(L)]
-    complete = [[-1] * A for _ in range(L)]
-    w_starts: list[int] = []
-    wcont: list[int] = []
-    w_start = 0
-    for wi, w in enumerate(words):
-        w_starts.append(w_start)
-        word = [sym[types[k]] for k in w]
-        # prefix function of the word
-        pi = [0] * len(word)
-        for j in range(1, len(word)):
-            g = pi[j - 1]
-            while g and word[j] != word[g]:
-                g = pi[g - 1]
-            pi[j] = g + 1 if word[j] == word[g] else 0
-        # continuation after a rejected full occurrence: longest proper
-        # prefix of the word that is also its suffix (KMP search resume)
-        gfull = pi[-1] if len(word) > 1 else 0
-        wcont.append(w_start + gfull)
-        for j in range(len(word)):
-            q = w_start + j
-            for a in range(A):
-                if a == word[j]:
-                    nxt = q + 1
-                    if j == len(word) - 1:
-                        complete[q][a] = wi
-                    if nxt == L:
-                        emit[q][a] = 1
-                        nxt = 0
-                else:
-                    # standard KMP search-automaton fallback: longest
-                    # proper suffix of (matched prefix + a) that is a
-                    # word prefix; never completes the word (g < j)
-                    g = j
-                    while g > 0 and word[g] != a:
-                        g = pi[g - 1]
-                    nxt = w_start + (g + 1 if word[g] == a else 0)
-                delta[q][a] = nxt
-        w_start += len(word)
-    w1c = [complete[0][a] == 0 for a in range(A)]
-    return {
-        "delta": delta,
-        "emit": emit,
-        "complete": complete,
-        "w_start": w_starts,
-        "wlen": [len(w) for w in words],
-        "wedge": wedge,
-        "wcont": wcont,
-        "w1c": w1c,
-        "n_words": len(words),
-        "L": L,
-    }
-
-
-def _seq_count_dfa(pattern: str, conds):
-    """Untimed counting-DFA view (delta, emit) of
-    :func:`_seq_count_dfa_meta` — the sequence_count_adjacent contract
-    (time edges raise)."""
-    meta = _seq_count_dfa_meta(pattern, conds, allow_timed=False)
-    return meta["delta"], meta["emit"]
-
-
-def _sequence_count_adjacent_users(
-    spark, sf_dir, pattern: str, conds=_SEQ_CONDS, events=None,
-    _sliced=None,
-):
-    """Per-user greedy non-overlapping ADJACENCY-AWARE match counts —
-    ClickHouse sequenceCount with the real pattern semantics
-    (AggregateFunctionSequenceMatch.h countAll): events matching no
-    declared condition are invisible, a bare edge requires consecutive
-    positions among the remaining events, '.*' permits any gap; after
-    each completed match the automaton restarts (non-overlapping,
-    leftmost via the KMP search DFA — leftmost-first word occurrence
-    equals the backtracking regex's leftmost match end).
-
-    Distributes exactly like the untimed restart automaton: the DFA's
-    action over a time slice is a pure map entry_state -> (exit_state,
-    completed_count), map composition is associative, so one Arrow
-    batch per composite (user, ts) slice folds the slice's events into
-    a state map (an O(L) gather per event — the whole L-state vector
-    advances at once), and the per-user fold over <= n_slices map rows
-    is the same pure-DataFrame HOF as sequence_count_compiled."""
-    import pandas as pd
-
-    from ..operators.ranking import composite_slice_key, slice_expr
-
-    delta_t, emit_t = _seq_count_dfa(pattern, conds)
-    n_states = len(delta_t)
-    sym = {c: a for a, c in enumerate(conds)}
-    if _sliced is not None:
-        # entry-shared base: every pattern reads the SAME conds-filtered
-        # sliced stream (the count-side compiled-family hoist)
-        st = _sliced
-    else:
-        ev = (
-            t(spark, sf_dir, "events") if events is None else events
-        ).select(
-            "user_id",
-            F.col("ts_us").cast("long").alias("ts_us"),
-            "event_id",
-            "event_type",
-        )
-        ev = ev.filter(F.col("event_type").isin(*set(conds)))
-        n_slices = spark.sparkContext.defaultParallelism
-        st = ev.withColumn(
-            "_sl",
-            slice_expr(
-                ev, composite_slice_key("user_id", "ts_us"), n_slices
-            ),
-        )
-
-    def tab(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        delta = np.asarray(delta_t, dtype=np.int64)
-        emit = np.asarray(emit_t, dtype=np.int64)
-        pdf = pdf.sort_values(
-            ["user_id", "ts_us", "event_id"], kind="mergesort"
-        )
-        uid = pdf["user_id"].to_numpy()
-        code = pdf["event_type"].map(sym).to_numpy(dtype=np.int64)
-        starts = np.flatnonzero(np.r_[True, uid[1:] != uid[:-1]])
-        ends = np.r_[starts[1:], len(uid)]
-        out_u, out_e, out_d = [], [], []
-        for a, b in zip(starts, ends):
-            # compose the per-event maps: smap[q] = state after the
-            # slice for entry state q; cnt[q] = matches completed
-            smap = np.arange(n_states, dtype=np.int64)
-            cnt = np.zeros(n_states, dtype=np.int64)
-            for c in code[a:b]:
-                cnt += emit[smap, c]
-                smap = delta[smap, c]
-            out_u.append(int(uid[a]))
-            out_e.append([int(x) for x in smap])
-            out_d.append([int(x) for x in cnt])
-        sl = int(pdf["_sl"].iloc[0]) if len(pdf) else 0
-        return pd.DataFrame(
-            {
-                "user_id": out_u,
-                "_sl": [sl] * len(out_u),
-                "exits": out_e,
-                "deltas": out_d,
-            }
-        )
-
-    funcs = RK.grouped_kernel(
-        st,
-        ["_sl"],
-        tab, "user_id long, _sl int, exits array<int>, deltas array<long>"
-    )
-    folded = funcs.groupBy("user_id").agg(
-        F.sort_array(
-            F.collect_list(F.struct("_sl", "exits", "deltas"))
-        ).alias("_fs")
-    )
-    state = F.aggregate(
-        F.col("_fs"),
-        F.struct(F.lit(0).alias("s"), F.lit(0).cast("long").alias("c")),
-        lambda acc, x: F.struct(
-            F.element_at(x["exits"], acc["s"] + 1).alias("s"),
-            (acc["c"] + F.element_at(x["deltas"], acc["s"] + 1)).alias("c"),
-        ),
-    )
-    counts = folded.select("user_id", state["c"].alias("seq_count"))
-    return counts.filter(F.col("seq_count") >= 1)
-
-
-def _restart_dfa(pattern: str, conds):
-    """(delta, emit) tables of the RESTART automaton
-    (:func:`_sequence_count_users` semantics) — state s waits for its
-    expected condition, ignores every other symbol, and the final
-    advance emits and restarts. Expressing the existence battery as a
-    DFA lets it ride the same block-diagonal fused kernel as the
-    adjacency battery (the match-jump tabulation in
-    `_sequence_count_users` computes the same function; equality is
-    pinned by the fused-battery test)."""
-    steps, edges = _parse_seq_pattern(pattern)
-    if any(e is not None for e in edges):
-        raise ValueError(
-            "restart DFA: time-constrained edges are not tabulable "
-            "(state would carry timestamps)"
-        )
-    types = [conds[i - 1] for i in steps]
-    sym = {c: a for a, c in enumerate(conds)}
-    k = len(types)
-    delta = [[s] * len(conds) for s in range(k)]
-    emit = [[0] * len(conds) for _ in range(k)]
-    for s, tname in enumerate(types):
-        a = sym[tname]
-        if s == k - 1:
-            delta[s][a] = 0
-            emit[s][a] = 1
-        else:
-            delta[s][a] = s + 1
-    return delta, emit
-
-
-def _sequence_count_battery_fused(
-    spark, sf_dir, patterns, conds=_SEQ_CONDS, _sliced=None,
-    dfa_of=_seq_count_dfa,
-):
-    """A whole untimed counting battery in ONE kernel pass + ONE fold
-    shuffle (r12, guide §2.4 fewer passes — the same fusion the timed
-    battery got in e42b40d, here with zero new kernel logic):
-
-    Every pattern's counting DFA reads the SAME conds-filtered stream
-    (undeclared types are invisible to every automaton in the battery),
-    and the per-slice tabulation is a pure gather over the state
-    vector — so the P automata STACK block-diagonally into one combined
-    (sum L_p)-state DFA whose per-event gather advances all of them at
-    once. The single-pattern kernel body is unchanged; only the tables
-    grow. The per-user fold then runs one HOF per pattern over its
-    block (entry state = the block offset; exit states never leave
-    their block), from ONE collect_list — P fold shuffles collapse
-    to 1. ``dfa_of`` picks the per-pattern table builder: the
-    adjacency KMP DFA (default) or :func:`_restart_dfa` for the
-    existence battery.
-
-    Equivalence to the per-pattern union is structural (block-diagonal
-    transition tables cannot interact) and pinned by
-    tests/test_sequence_count_adjacent.py::test_fused_battery_matches_
-    per_pattern_union on the sf0.01 corpus (both batteries)."""
-    import pandas as pd
-
-    from ..operators.ranking import composite_slice_key, slice_expr
-
-    sym = {c: a for a, c in enumerate(conds)}
-    delta_rows: list[list[int]] = []
-    emit_rows: list[list[int]] = []
-    offsets: list[int] = []
-    for pat in patterns:
-        d, e = dfa_of(pat, conds)
-        off = len(delta_rows)
-        offsets.append(off)
-        delta_rows.extend([x + off for x in row] for row in d)
-        emit_rows.extend(list(row) for row in e)
-    n_states = len(delta_rows)
-
-    if _sliced is not None:
-        st = _sliced
-    else:
-        ev = t(spark, sf_dir, "events").select(
-            "user_id",
-            F.col("ts_us").cast("long").alias("ts_us"),
-            "event_id",
-            "event_type",
-        )
-        ev = ev.filter(F.col("event_type").isin(*set(conds)))
-        n_slices = spark.sparkContext.defaultParallelism
-        st = ev.withColumn(
-            "_sl",
-            slice_expr(
-                ev, composite_slice_key("user_id", "ts_us"), n_slices
-            ),
-        )
-
-    def tab(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        delta = np.asarray(delta_rows, dtype=np.int64)
-        emit = np.asarray(emit_rows, dtype=np.int64)
-        pdf = pdf.sort_values(
-            ["user_id", "ts_us", "event_id"], kind="mergesort"
-        )
-        uid = pdf["user_id"].to_numpy()
-        code = pdf["event_type"].map(sym).to_numpy(dtype=np.int64)
-        starts = np.flatnonzero(np.r_[True, uid[1:] != uid[:-1]])
-        ends = np.r_[starts[1:], len(uid)]
-        out_u, out_e, out_d = [], [], []
-        for a, b in zip(starts, ends):
-            smap = np.arange(n_states, dtype=np.int64)
-            cnt = np.zeros(n_states, dtype=np.int64)
-            for c in code[a:b]:
-                cnt += emit[smap, c]
-                smap = delta[smap, c]
-            out_u.append(int(uid[a]))
-            out_e.append([int(x) for x in smap])
-            out_d.append([int(x) for x in cnt])
-        sl = int(pdf["_sl"].iloc[0]) if len(pdf) else 0
-        return pd.DataFrame(
-            {
-                "user_id": out_u,
-                "_sl": [sl] * len(out_u),
-                "exits": out_e,
-                "deltas": out_d,
-            }
-        )
-
-    funcs = RK.grouped_kernel(
-        st,
-        ["_sl"],
-        tab, "user_id long, _sl int, exits array<int>, deltas array<long>"
-    )
-    folded = funcs.groupBy("user_id").agg(
-        F.sort_array(
-            F.collect_list(F.struct("_sl", "exits", "deltas"))
-        ).alias("_fs")
-    )
-
-    def count_for(off: int):
-        return F.aggregate(
-            F.col("_fs"),
-            F.struct(
-                F.lit(off).alias("s"), F.lit(0).cast("long").alias("c")
-            ),
-            lambda acc, x: F.struct(
-                F.element_at(x["exits"], acc["s"] + 1).alias("s"),
-                (acc["c"] + F.element_at(x["deltas"], acc["s"] + 1)).alias(
-                    "c"
-                ),
-            ),
-        )["c"]
-
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(pat).alias("pattern"),
-                count_for(off).cast("long").alias("seq_count"),
-            )
-            for pat, off in zip(patterns, offsets)
-        ]
-    )
-    return (
-        folded.select("user_id", F.explode(pairs).alias("_x"))
-        .select(
-            F.col("_x.pattern").alias("pattern"),
-            "user_id",
-            F.col("_x.seq_count").alias("seq_count"),
-        )
-        .filter(F.col("seq_count") >= 1)
+        t(spark, sf_dir, "events"), _SEQ_COUNT_TIMED_PATTERNS, _SEQ_CONDS
     )
 
 
@@ -10784,506 +9660,16 @@ def sequence_count_adjacent(spark, sf_dir):
     # (undeclared types invisible, everything else position-relevant),
     # so one materialized sliced base serves every pattern (r13:
     # checkpointed — see cache.checkpoint_in)
+    ev = t(spark, sf_dir, "events")
     base = checkpoint_in(
         rotating_scope("sequence_count_adjacent"),
-        _seq_count_sliced_base(spark, sf_dir, _SEQ_CONDS),
+        _seq_count_sliced_base(ev, _SEQ_CONDS),
     )
     # r12: the four automata stack block-diagonally into one combined
     # DFA — one kernel pass + one fold shuffle for the whole battery
     # (was: per-pattern kernel+fold x4, unioned)
     return _sequence_count_battery_fused(
-        spark, sf_dir, _SEQ_COUNT_ADJ_PATTERNS, _sliced=base
-    )
-
-
-#: kernel-side sub-slice width for the timed-adjacency product: the
-#: '>' wait-chain tabulation is quadratic in a user's contiguous block
-#: width, so blocks bound it to O(rows * BLOCK) while the per-user fold
-#: composes blocks exactly like slices. IDS = the per-(user, slice)
-#: block-count ceiling encoded into the composite fold key.
-_ADJT_BLOCK = 1500
-_ADJT_BLOCK_IDS = 1_000_000
-
-
-def _adjt_lag_depths(meta) -> list[int]:
-    """Occurrence-start lookbacks the product automaton needs: for each
-    timed-inbound word of length L, the completion event must see the
-    timestamp L-1 declared positions back (the word occupies L
-    CONSECUTIVE declared positions, so the start is a fixed lag)."""
-    return sorted(
-        {
-            meta["wlen"][j] - 1
-            for j in range(meta["n_words"])
-            if meta["wedge"][j] is not None and meta["wlen"][j] >= 2
-        }
-    )
-
-
-def _adjt_transfer_pieces(meta, code, tsv, lag):
-    """Per-block piecewise transfer tables of the timed-adjacency
-    product automaton: the (brk, exs, ext, exd) entry-state rows of ONE
-    (user, block) for one pattern. Extracted VERBATIM from the
-    single-pattern kernel (r12 — the same extraction
-    :func:`_timed_transfer_pieces` got in the timed battery fusion) so
-    the fused battery reuses it bit-identically. ``lag`` maps
-    occurrence-start depths to the block's lag columns; a superset of
-    the pattern's own depths is fine — only ``wlen-1`` depths of timed
-    multi-symbol words are read."""
-    delta_t = meta["delta"]
-    complete_t = meta["complete"]
-    w_start_t = meta["w_start"]
-    wlen_t = meta["wlen"]
-    wedge_t = meta["wedge"]
-    wcont_t = meta["wcont"]
-    n_words = meta["n_words"]
-    L = meta["L"]
-    n = len(code)
-
-    def occ_start(i: int, j: int) -> int:
-        d = wlen_t[j] - 1
-        return int(tsv[i]) if d == 0 else int(lag[d][i])
-
-    def lock(j: int, i: int):
-        # outcome of LOCKING word j at completing event i
-        if j == n_words - 1:
-            return 0, _SEQ_TIMED_SENT, 1
-        return w_start_t[j + 1], int(tsv[i]), 0
-
-    def restart(i: int):
-        # reprocess event i from state 0 with the anchor cleared
-        a = int(code[i])
-        if complete_t[0][a] == 0:  # single-symbol first word
-            return w_start_t[1], int(tsv[i]), 0
-        return delta_t[0][a], _SEQ_TIMED_SENT, 0
-
-    def cstep(q: int, i: int, tp: int):
-        a = int(code[i])
-        j = complete_t[q][a]
-        if j < 0:
-            return delta_t[q][a], tp, 0
-        e = wedge_t[j]
-        if e is not None:
-            gap = occ_start(i, j) - tp
-            op, tb = e
-            ok = (
-                gap < tb
-                if op == "<"
-                else gap > tb
-                if op == ">"
-                else gap == tb
-            )
-            if not ok:
-                if op == ">" or (op == "==" and gap < tb):
-                    return wcont_t[j], tp, 0  # wait
-                return restart(i)  # dead chain
-        return lock(j, i)
-
-    def crun(i0: int, q: int, tp: int):
-        c = 0
-        for k in range(i0, n):
-            q, tp, dc = cstep(q, k, tp)
-            c += dc
-        return q, tp, c
-
-    def lock_run(j: int, i: int):
-        q2, tp2, dc = lock(j, i)
-        qe, te, ce = crun(i + 1, q2, tp2)
-        return qe, te, dc + ce
-
-    def restart_run(i: int):
-        q2, tp2, dc = restart(i)
-        qe, te, ce = crun(i + 1, q2, tp2)
-        return qe, te, dc + ce
-
-    brk: list = []
-    exs: list = []
-    ext: list = []
-    exd: list = []
-    for entry in range(L):
-        # symbolic prefix: the DFA advances t_prev-free until
-        # the first word completion
-        q, i = entry, 0
-        while i < n and complete_t[q][int(code[i])] < 0:
-            q = delta_t[q][int(code[i])]
-            i += 1
-        if i == n:
-            brk.append([])
-            exs.append([q]); ext.append([None]); exd.append([0])
-            continue
-        j = complete_t[q][int(code[i])]
-        e = wedge_t[j]
-        if e is None:
-            # untimed lock/emit: concrete from here on
-            pieces = [lock_run(j, i)]
-            breaks: list = []
-        elif e[0] == "<":
-            s0 = occ_start(i, j)
-            pieces = [restart_run(i), lock_run(j, i)]
-            breaks = [s0 - e[1]]
-        else:
-            # enumerate the wait chain: successive completions
-            # of word j under KMP-search resume
-            comps = [(i, occ_start(i, j))]
-            qq, k = wcont_t[j], i + 1
-            while k < n:
-                a2 = int(code[k])
-                if complete_t[qq][a2] == j:
-                    comps.append((k, occ_start(k, j)))
-                    qq = wcont_t[j]
-                else:
-                    qq = delta_t[qq][a2]
-                k += 1
-            if e[0] == ">":
-                pieces = [lock_run(j, c) for c, _ in comps]
-                pieces.append((qq, None, 0))  # wait out the slice
-                breaks = [s - e[1] - 1 for _, s in comps]
-            else:  # '==': restart intervals + point locks
-                uniq = []
-                for c, s in comps:
-                    if not uniq or s != uniq[-1][1]:
-                        uniq.append((c, s))
-                pieces, breaks = [], []
-                for c, s in uniq:
-                    pieces.append(restart_run(c))
-                    breaks.append(s - e[1] - 1)
-                    pieces.append(lock_run(j, c))
-                    breaks.append(s - e[1])
-                pieces.append((qq, None, 0))
-        # compress: merge adjacent pieces with equal outcomes
-        cb: list = []
-        cp: list = [pieces[0]]
-        for bval, piece in zip(breaks, pieces[1:]):
-            if piece == cp[-1]:
-                continue
-            cb.append(bval)
-            cp.append(piece)
-        brk.append(cb)
-        exs.append([p_[0] for p_ in cp])
-        ext.append([p_[1] for p_ in cp])
-        exd.append([p_[2] for p_ in cp])
-    return brk, exs, ext, exd
-
-
-def _sequence_count_adjacent_timed_users(
-    spark, sf_dir, pattern: str, conds=_SEQ_CONDS, events=None,
-    _sliced=None, _bounds=None,
-):
-    """sequenceCount with TIME CONSTRAINTS under the REAL adjacency
-    semantics — the product of the KMP counting DFA
-    (:func:`_sequence_count_adjacent_users`) and the timed wait/restart
-    automaton (:func:`_sequence_count_timed_users`). ClickHouse accepts
-    ``sequenceCount('(?1)(?t<3600)(?2)')`` (a time constraint compiles
-    to KleeneStar + a gap check in AggregateFunctionSequenceMatch.h, so
-    every timed edge is a BETWEEN-WORD edge; within a word all edges
-    are bare-adjacent and untimed by construction).
-
-    Pinned product semantics (greedy scan, the documented deviation
-    from ClickHouse's backtracking matcher — same pin as the timed
-    restart automaton): declared-condition events scan per user in
-    (ts, event_id) order and drive the counting DFA. Completing word j
-    whose inbound edge is (op, T) checks ``gap = start(occurrence) -
-    t_prev`` where ``start(occurrence)`` is the timestamp of the
-    occurrence's FIRST event (the matched event of the step right
-    after the constraint — the KMP fallback can shift the occurrence
-    later than the first candidate, so the check must be at COMPLETION
-    against the true start, not at word entry) and ``t_prev`` is the
-    completion timestamp of the previously locked word:
-      satisfied  -> LOCK: t_prev := completion ts; advance (final word:
-                    count += 1, restart at state 0, anchor cleared)
-      '<' violated (or '==' with gap > T) -> DEAD: later occurrences
-                    start later, the bound can never hold — RESTART by
-                    reprocessing the completing event from state 0
-                    (re-anchoring iff it completes a single-symbol
-                    first word)
-      '>' violated (or '==' with gap < T) -> WAIT: later occurrences
-                    only widen the gap toward the bound, so waiting
-                    dominates — resume the KMP search of word j at its
-                    full-occurrence continuation state (w_start +
-                    prefix_function(word)), anchor unchanged
-    Untimed ('.*') boundaries lock unconditionally; '<='/'>=' reduce
-    to strict bounds exactly on integer microseconds.
-
-    Distribution is the timed machine's step-function algebra over the
-    counting DFA's state space: per composite (user, ts) slice, the
-    transfer out of each entry state is piecewise-constant in the
-    carried t_prev — the DFA advances deterministically until the
-    first word completion; an untimed completion makes everything
-    after it concrete (1 piece); a '<' gate has one threshold at the
-    first completion's start (2 pieces); a '>' gate one piece per
-    candidate completion in its wait chain plus a never-advances tail;
-    '==' alternates restart intervals with single-point lock pieces.
-    Cross-slice occurrence starts are carried as DATA, not state: a
-    per-user positional LAG column (skew-safe operators/ranking.ranked
-    join on (user, rank-d)) gives every event its occurrence-start
-    timestamp locally, so the fold stays the shared
-    (state, t_prev, count) HOF of _piecewise_fold_counts."""
-    import pandas as pd
-
-    from ..operators.ranking import composite_slice_key, ranked, slice_expr
-
-    meta = _seq_count_dfa_meta(pattern, conds, allow_timed=True)
-    sym = {c: a for a, c in enumerate(conds)}
-    depths = _adjt_lag_depths(meta)
-
-    if _sliced is not None and not depths:
-        # a depth-free pattern reads the entry-shared sliced base as-is
-        st = _sliced
-    else:
-        ev = (
-            # a depth pattern still SCANS from the shared persisted base
-            # when available (drop its slice ids — the ranked build and
-            # the lag joins need their own), so the battery pays one
-            # parquet scan total
-            _sliced.drop("_sl")
-            if _sliced is not None
-            else (
-                t(spark, sf_dir, "events") if events is None else events
-            ).select(
-                "user_id",
-                F.col("ts_us").cast("long").alias("ts_us"),
-                "event_id",
-                "event_type",
-            ).filter(F.col("event_type").isin(*set(conds)))
-        )
-        if depths:
-            base = ranked(
-                ev.withColumnRenamed("ts_us", "_ets"),
-                ["user_id"],
-                ["_ets", "event_id"],
-                slice_col=composite_slice_key("user_id", "_ets"),
-                broadcast_offsets=False,  # offsets grow with data (r9 trap)
-                # entry-shared quantile literals (r12): without them this
-                # ranked ran its own quantile job over the same stream
-                bounds=_bounds,
-            ).drop("_n")
-            for d in depths:
-                lagd = base.select(
-                    F.col("user_id").alias("_lu"),
-                    (F.col("_rank") + F.lit(d)).alias("_lr"),
-                    F.col("_ets").alias(f"_lag{d}"),
-                )
-                base = base.join(
-                    lagd,
-                    (F.col("user_id") == F.col("_lu"))
-                    & (F.col("_rank") == F.col("_lr")),
-                    "left",
-                ).drop("_lu", "_lr")
-            st = base.withColumnRenamed("_ets", "ts_us").drop("_rank")
-        else:
-            st = ev
-        # default slice count: the O(width^2) wait-chain tabulation is
-        # bounded KERNEL-SIDE by fixed-width _ADJT_BLOCK sub-slices
-        # (commit 3f85030), not by extra shuffle slices
-        n_slices = spark.sparkContext.defaultParallelism
-        st = st.withColumn(
-            "_sl",
-            slice_expr(
-                st,
-                composite_slice_key("user_id", "ts_us"),
-                n_slices,
-                # shared literals: a fresh quantile job here re-executed
-                # the ranked + lag-join subtree above (r12, guide §1.2)
-                bounds=_bounds,
-            ),
-        )
-    lag_cols = [f"_lag{d}" for d in depths]
-
-    def tab(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        pdf = pdf.sort_values(
-            ["user_id", "ts_us", "event_id"], kind="mergesort"
-        )
-        uid = pdf["user_id"].to_numpy()
-        code_all = pdf["event_type"].map(sym).to_numpy(dtype=np.int64)
-        ts_all = pdf["ts_us"].to_numpy(dtype=np.int64)
-        lag_all = {}
-        for d, c in zip(depths, lag_cols):
-            v = pdf[c].to_numpy(dtype="float64")
-            # null lag = fewer than d prior events: unreachable at a
-            # genuine completion (an occurrence needs d+1 consecutive
-            # declared events); fill with the sentinel for determinism
-            lag_all[d] = np.where(
-                np.isnan(v), float(_SEQ_TIMED_SENT), v
-            ).astype(np.int64)
-        starts = np.flatnonzero(np.r_[True, uid[1:] != uid[:-1]])
-        ends = np.r_[starts[1:], len(uid)]
-        sl = int(pdf["_sl"].iloc[0]) if len(pdf) else 0
-        cols: dict[str, list] = {
-            k: [] for k in ("user_id", "_sl", "brk", "exs", "ext", "exd")
-        }
-        # kernel-side sub-slicing (skew fix, measured 4.86x on the
-        # mega-user corpus): a '>'-gated wait chain tabulates one
-        # concrete continuation per candidate completion — O(width^2)
-        # in a user's in-slice width. Fixed-width blocks bound that to
-        # O(width * BLOCK) per user, and the SAME per-user fold
-        # composes the blocks (composite ids keep (slice, block)
-        # order); slice count stays at defaultParallelism, whose
-        # when-chain slice assignment is O(n_slices) per row.
-        blk_pairs = []
-        for ua, ub in zip(starts, ends):
-            for ca in range(int(ua), int(ub), _ADJT_BLOCK):
-                blk_pairs.append(
-                    (int(ua), ca, min(ca + _ADJT_BLOCK, int(ub)))
-                )
-        for ua, ca, ce in blk_pairs:
-            code = code_all[ca:ce]
-            tsv = ts_all[ca:ce]
-            lag = {d: lag_all[d][ca:ce] for d in depths}
-            brk, exs, ext, exd = _adjt_transfer_pieces(
-                meta, code, tsv, lag
-            )
-            cols["user_id"].append(int(uid[ua]))
-            # composite (slice, block) id: the fold's _sl sort keeps
-            # block order inside each slice
-            cols["_sl"].append(sl * _ADJT_BLOCK_IDS + (ca - int(ua)) // _ADJT_BLOCK)
-            cols["brk"].append(brk)
-            cols["exs"].append(exs)
-            cols["ext"].append(ext)
-            cols["exd"].append(exd)
-        return pd.DataFrame(cols)
-
-    funcs = RK.grouped_kernel(
-        st,
-        ["_sl"],
-        tab,
-        "user_id long, brk array<array<long>>, exs array<array<int>>, "
-        "ext array<array<long>>, exd array<array<long>>, _sl long",
-    )
-    return _piecewise_fold_counts(funcs)
-
-
-def _sequence_count_adjacent_timed_multi(
-    spark, sf_dir, patterns, conds=_SEQ_CONDS, _sliced=None, _bounds=None,
-):
-    """The timed-ADJACENCY count battery FUSED (r12, guide §1.2/§2.4 —
-    the same shape as :func:`_sequence_count_timed_multi`): ONE
-    ranked/lag subtree built for the UNION of the patterns' occurrence-
-    start depths, ONE applyInPandas pass whose per-block sort, symbol
-    coding and lag extraction are shared across patterns
-    (:func:`_adjt_transfer_pieces` runs per pattern bit-identically to
-    the single-pattern kernel), and ONE (pattern, user) fold shuffle
-    replacing |patterns| separate kernel+fold jobs. Patterns without
-    lag depths simply never read the extra lag columns."""
-    import pandas as pd
-
-    from ..operators.ranking import composite_slice_key, ranked, slice_expr
-
-    metas = [
-        _seq_count_dfa_meta(p, conds, allow_timed=True) for p in patterns
-    ]
-    sym = {c: a for a, c in enumerate(conds)}
-    all_depths = sorted({d for m in metas for d in _adjt_lag_depths(m)})
-
-    if _sliced is not None and not all_depths:
-        st = _sliced
-    else:
-        ev = (
-            _sliced.drop("_sl")
-            if _sliced is not None
-            else t(spark, sf_dir, "events").select(
-                "user_id",
-                F.col("ts_us").cast("long").alias("ts_us"),
-                "event_id",
-                "event_type",
-            ).filter(F.col("event_type").isin(*set(conds)))
-        )
-        if all_depths:
-            base = ranked(
-                ev.withColumnRenamed("ts_us", "_ets"),
-                ["user_id"],
-                ["_ets", "event_id"],
-                slice_col=composite_slice_key("user_id", "_ets"),
-                broadcast_offsets=False,  # offsets grow with data (r9 trap)
-                bounds=_bounds,
-            ).drop("_n")
-            for d in all_depths:
-                lagd = base.select(
-                    F.col("user_id").alias("_lu"),
-                    (F.col("_rank") + F.lit(d)).alias("_lr"),
-                    F.col("_ets").alias(f"_lag{d}"),
-                )
-                base = base.join(
-                    lagd,
-                    (F.col("user_id") == F.col("_lu"))
-                    & (F.col("_rank") == F.col("_lr")),
-                    "left",
-                ).drop("_lu", "_lr")
-            st = base.withColumnRenamed("_ets", "ts_us").drop("_rank")
-        else:
-            st = ev
-        n_slices = spark.sparkContext.defaultParallelism
-        st = st.withColumn(
-            "_sl",
-            slice_expr(
-                st,
-                composite_slice_key("user_id", "ts_us"),
-                n_slices,
-                bounds=_bounds,
-            ),
-        )
-    lag_cols = [f"_lag{d}" for d in all_depths]
-
-    def tab(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        pdf = pdf.sort_values(
-            ["user_id", "ts_us", "event_id"], kind="mergesort"
-        )
-        uid = pdf["user_id"].to_numpy()
-        code_all = pdf["event_type"].map(sym).to_numpy(dtype=np.int64)
-        ts_all = pdf["ts_us"].to_numpy(dtype=np.int64)
-        lag_all = {}
-        for d, c in zip(all_depths, lag_cols):
-            v = pdf[c].to_numpy(dtype="float64")
-            lag_all[d] = np.where(
-                np.isnan(v), float(_SEQ_TIMED_SENT), v
-            ).astype(np.int64)
-        starts = np.flatnonzero(np.r_[True, uid[1:] != uid[:-1]])
-        ends = np.r_[starts[1:], len(uid)]
-        sl = int(pdf["_sl"].iloc[0]) if len(pdf) else 0
-        cols: dict[str, list] = {
-            k: []
-            for k in ("_p", "user_id", "_sl", "brk", "exs", "ext", "exd")
-        }
-        blk_pairs = []
-        for ua, ub in zip(starts, ends):
-            for ca in range(int(ua), int(ub), _ADJT_BLOCK):
-                blk_pairs.append(
-                    (int(ua), ca, min(ca + _ADJT_BLOCK, int(ub)))
-                )
-        for ua, ca, ce in blk_pairs:
-            code = code_all[ca:ce]
-            tsv = ts_all[ca:ce]
-            lag = {d: lag_all[d][ca:ce] for d in all_depths}
-            comp_sl = sl * _ADJT_BLOCK_IDS + (ca - int(ua)) // _ADJT_BLOCK
-            for pi, m in enumerate(metas):
-                brk, exs, ext, exd = _adjt_transfer_pieces(
-                    m, code, tsv, lag
-                )
-                cols["_p"].append(pi)
-                cols["user_id"].append(int(uid[ua]))
-                cols["_sl"].append(comp_sl)
-                cols["brk"].append(brk)
-                cols["exs"].append(exs)
-                cols["ext"].append(ext)
-                cols["exd"].append(exd)
-        return pd.DataFrame(cols)
-
-    funcs = RK.grouped_kernel(
-        st,
-        ["_sl"],
-        tab,
-        "_p int, user_id long, brk array<array<long>>, "
-        "exs array<array<int>>, ext array<array<long>>, "
-        "exd array<array<long>>, _sl long",
-    )
-    counts = _piecewise_fold_counts(funcs, keys=("_p", "user_id"))
-    pat_arr = F.array(*[F.lit(p) for p in patterns])
-    return counts.select(
-        F.element_at(pat_arr, F.col("_p") + 1).alias("pattern"),
-        "user_id",
-        F.col("seq_count").cast("long").alias("seq_count"),
+        ev, _SEQ_COUNT_ADJ_PATTERNS, _SEQ_CONDS, _sliced=base
     )
 
 
@@ -11517,9 +9903,8 @@ def sequence_count_adjacent_timed(spark, sf_dir):
     # the fused battery's skew ratio 2.39 (SKEW_PROBE, clean steal) is
     # the straggler-concentration cost of serializing patterns per
     # slice task, accepted against a 3x uniform-case regression.
-    sliced, bounds = _seq_count_sliced_base(
-        spark, sf_dir, _SEQ_CONDS, with_bounds=True
-    )
+    ev = t(spark, sf_dir, "events")
+    sliced, bounds = _seq_count_sliced_base(ev, _SEQ_CONDS, with_bounds=True)
     base = checkpoint_in(
         rotating_scope("sequence_count_adjacent_timed"), sliced
     )
@@ -11528,7 +9913,7 @@ def sequence_count_adjacent_timed(spark, sf_dir):
     # per-block sort/coding across patterns, one (pattern, user) fold
     # shuffle (was: per-pattern kernel+fold x4, unioned)
     return _sequence_count_adjacent_timed_multi(
-        spark, sf_dir, _SEQ_COUNT_ADJT_PATTERNS,
+        ev, _SEQ_COUNT_ADJT_PATTERNS, _SEQ_CONDS,
         _sliced=base, _bounds=bounds,
     )
 

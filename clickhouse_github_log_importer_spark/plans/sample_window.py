@@ -130,14 +130,36 @@ SAMPLED_PRIOR: frozenset[str] = frozenset(
     }
 )
 
-# round-13 window: (a) user_activity (entry() names it), (b) every entry
-# whose plan changes this optimization round (none brand-new — r13 adds
-# no features), (c) re-verification filler ordered by OLDEST
-# latest-green driver evidence: the full 25-entry r8-evidence block
-# (the oldest tail after r12 held full cumulative coverage), then the
+# window: (a) user_activity (entry() names it), (b) the entries whose
+# code the current change touches, (c) the r13-rewritten entries (their
+# checkpoint, bounds-memo and builder rewrites still lack a driver-green
+# row), then re-verification filler ordered by OLDEST latest-green driver
+# evidence: the full 25-entry r8-evidence block, then the head of the
 # r9-evidence block in registration order (fills to 50).
 DRIVER_SAMPLE: tuple[str, ...] = (
     "user_activity",
+    # --- touched by the current change (count engine moved) ---
+    "sequence_count_compiled",
+    "sequence_count_timed",
+    "sequence_count_adjacent",
+    "sequence_count_adjacent_timed",
+    # --- r13 rewrites (sequence chains, checkpoints, pagerank, BPE) ---
+    "sequence_match_compiled",
+    "sequence_match_adjacent",
+    "window_funnel_strict_dedup",
+    "kmv_set_operations",
+    "minhash_estimate_report",
+    "chunk_dup_rate",
+    "ngram_lm_fluency",
+    "dsir_importance_weights",
+    "heavy_hitters_cms",
+    "bitmap_audience_overlap",
+    "decontamination_report",
+    "dedup_minhash_lsh",
+    "ngram_jaccard_pairs",
+    "dedup_clusters",
+    "pagerank_user_item",
+    "bpe_merge_table_incremental",
     # --- r8-evidence block (oldest latest-green), registration order ---
     "q21_sole_blame_suppliers",
     "sequence_next_node",
@@ -169,26 +191,6 @@ DRIVER_SAMPLE: tuple[str, ...] = (
     "events_per_type",
     "most_used_prop",
     "most_used_word",
-    "missing_hours",
-    "user_watermarks",
-    "dedup_last_write_wins",
-    "top_users_by_value",
-    "users_not_customers",
-    "hourly_event_counts",
-    "top_brands_by_revenue",
-    "nation_customer_rollup",
-    "order_priority_counts",
-    "top_events_per_user",
-    "daily_running_totals",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "simhash_signatures",
-    "ngram_jaccard_pairs",
-    "ann_cosine_topk",
-    "ann_lsh_buckets",
-    "ann_ivf_lists",
-    "ann_ivf_topk",
-    "ann_lsh_topk",
 )
 
 

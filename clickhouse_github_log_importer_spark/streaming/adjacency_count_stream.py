@@ -2,7 +2,7 @@
 
 Counting sibling of streaming/adjacency_stream.py, twin of the batch
 ``sequence_count_adjacent`` / ``sequence_count_adjacent_timed``
-machines (plans/queries.py). Where the batch side needs DFA-map
+machines (operators/sequence.py). Where the batch side needs DFA-map
 composition (untimed) or the piecewise step-function algebra (timed)
 to distribute across time slices, the STREAMING form processes each
 user's declared events strictly in order — so the state is simply the
@@ -47,7 +47,7 @@ _SENT = -(2**62)
 
 def compile_count_product(pattern: str, conds: tuple[str, ...]):
     """The batch product-automaton tables (timed edges allowed)."""
-    from ..plans.queries import _seq_count_dfa_meta
+    from ..operators.sequence import _seq_count_dfa_meta
 
     return _seq_count_dfa_meta(pattern, conds, allow_timed=True)
 

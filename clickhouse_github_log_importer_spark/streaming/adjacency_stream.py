@@ -64,18 +64,12 @@ _POS = 2**62
 def compile_adjacency(pattern: str, conds: tuple[str, ...]):
     """(types, edges, adjacent) for the streaming DP — the batch
     compiler's three-value parse."""
-    from ..plans.queries import _parse_seq_pattern
+    from ..operators.sequence import _cond_types, _parse_seq_pattern
 
     steps, edges, adjacent = _parse_seq_pattern(
         pattern, with_adjacency=True
     )
-    bad = [i for i in steps if i > len(conds)]
-    if bad:
-        raise ValueError(
-            f"sequenceMatch pattern: condition index (?{bad[0]}) out of "
-            f"range — {len(conds)} conditions defined"
-        )
-    return [conds[i - 1] for i in steps], edges, adjacent
+    return _cond_types(steps, conds), edges, adjacent
 
 
 def fresh_vec(L):

@@ -9,6 +9,7 @@ from __future__ import annotations
 import datetime as dt
 import random
 
+from clickhouse_github_log_importer_spark.operators.sequence import sequence_count
 from clickhouse_github_log_importer_spark.streaming.adjacency_count_stream import (
     _SENT,
     advance_count,
@@ -51,35 +52,37 @@ def _core_counts(spark, sf, pattern, conds=CONDS):
     return out
 
 
+def _batch_counts(ev, pattern, conds=CONDS):
+    """The batch adjacency counter (a one-pattern battery) per user."""
+    return {
+        r["user_id"]: r["seq_count"]
+        for r in sequence_count(
+            ev, pattern, conds, semantics="adjacency"
+        ).collect()
+    }
+
+
 def test_core_matches_batch_untimed(spark, sf_smoke):
     from clickhouse_github_log_importer_spark.plans.queries import (
         _SEQ_COUNT_ADJ_PATTERNS,
-        _sequence_count_adjacent_users,
+        t,
     )
 
+    ev = t(spark, sf_smoke, "events")
     for pat in _SEQ_COUNT_ADJ_PATTERNS:
-        batch = {
-            r["user_id"]: r["seq_count"]
-            for r in _sequence_count_adjacent_users(
-                spark, sf_smoke, pat
-            ).collect()
-        }
+        batch = _batch_counts(ev, pat)
         assert _core_counts(spark, sf_smoke, pat) == batch, pat
 
 
 def test_core_matches_batch_timed(spark, sf_smoke):
     from clickhouse_github_log_importer_spark.plans.queries import (
         _SEQ_COUNT_ADJT_PATTERNS,
-        _sequence_count_adjacent_timed_users,
+        t,
     )
 
+    ev = t(spark, sf_smoke, "events")
     for pat in _SEQ_COUNT_ADJT_PATTERNS:
-        batch = {
-            r["user_id"]: r["seq_count"]
-            for r in _sequence_count_adjacent_timed_users(
-                spark, sf_smoke, pat
-            ).collect()
-        }
+        batch = _batch_counts(ev, pat)
         assert _core_counts(spark, sf_smoke, pat) == batch, pat
 
 
@@ -88,10 +91,6 @@ def test_streaming_counts_equal_batch(spark, tmp_path):
     import time
 
     from pyspark.sql import functions as F
-
-    from clickhouse_github_log_importer_spark.plans.queries import (
-        _sequence_count_adjacent_timed_users,
-    )
 
     DDL = "user_id long, ts timestamp, event_type string, event_id long"
     rng = random.Random(23)
@@ -147,11 +146,6 @@ def test_streaming_counts_equal_batch(spark, tmp_path):
         "event_id",
         "event_type",
     )
-    batch = {
-        r["user_id"]: r["seq_count"]
-        for r in _sequence_count_adjacent_timed_users(
-            spark, None, pattern, conds=CONDS, events=ev
-        ).collect()
-    }
+    batch = _batch_counts(ev, pattern)
     assert got == batch
     assert batch  # fixture must exercise real counts

@@ -249,3 +249,22 @@ def test_bounds_memo_hits_and_never_changes_results(spark, tmp_path):
     finally:
         R.clear_bounds_memo()
     assert poisoned == expected
+
+
+def test_bounds_memo_drops_other_applications_on_insert(spark):
+    """A memo key from another application can never be served again
+    (keys lead with the applicationId), so an insert evicts it: the memo
+    holds one application's boundaries, not every session's."""
+    from clickhouse_github_log_importer_spark.operators import ranking as R
+
+    df = spark.createDataFrame([(float(i),) for i in range(50)], "v double")
+    foreign = ("app-that-has-ended", 0, 5)
+    R.clear_bounds_memo()
+    R._BOUNDS_MEMO[foreign] = [1.0]
+    try:
+        R.slice_bounds(df, "v", 5)
+        assert foreign not in R._BOUNDS_MEMO
+        app = spark.sparkContext.applicationId
+        assert R._BOUNDS_MEMO and all(k[0] == app for k in R._BOUNDS_MEMO)
+    finally:
+        R.clear_bounds_memo()

@@ -58,10 +58,15 @@ def test_window_actually_rotates():
         assert new_this_round in DRIVER_SAMPLE, new_this_round
 
 
-# brand-new or plan-changed entries this round; grows as the round does
-# (r13 is an optimization round: no brand-new entries; plan-changed
-# entries join here AND the window as optimizations land)
-NEW_THIS_ROUND: tuple[str, ...] = ()
+# brand-new or rewritten entries of the current change; each joins here
+# AND the window (the count engine moved out of plans/queries.py, so the
+# four sequenceCount batteries' builders changed)
+NEW_THIS_ROUND: tuple[str, ...] = (
+    "sequence_count_compiled",
+    "sequence_count_timed",
+    "sequence_count_adjacent",
+    "sequence_count_adjacent_timed",
+)
 
 
 def test_ordered_names_stable_tail():

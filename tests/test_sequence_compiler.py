@@ -1,5 +1,7 @@
-"""sequenceMatch pattern compiler (plans/queries.py:
-_parse_seq_pattern / _sequence_match_users / sequence_match_compiled).
+"""sequenceMatch pattern compiler (operators/sequence.py:
+_parse_seq_pattern; plans/queries.py: _sequence_match_users /
+sequence_match_compiled) and the sequenceCount restart automata, which
+run through the library dispatcher (one-pattern batteries).
 
 The compiler must (a) parse the ClickHouse pattern grammar exactly and
 reject malformed strings loudly, (b) agree with the two fixed entries
@@ -11,11 +13,23 @@ from __future__ import annotations
 
 import pytest
 
-from clickhouse_github_log_importer_spark.plans.queries import (
-    REGISTRY,
+from clickhouse_github_log_importer_spark.operators.sequence import (
     _parse_seq_pattern,
-    _sequence_match_users,
+    sequence_count,
 )
+from clickhouse_github_log_importer_spark.plans.queries import (
+    _SEQ_CONDS,
+    REGISTRY,
+    _sequence_match_users,
+    t,
+)
+
+
+def _count_rows(spark, sf_dir, pattern):
+    """Restart-semantics counts of one pattern over the registry
+    conditions: the library dispatcher, i.e. a one-pattern battery
+    (the timed battery when the pattern has a time edge)."""
+    return sequence_count(t(spark, sf_dir, "events"), pattern, _SEQ_CONDS)
 
 
 def test_parse_steps_and_edges():
@@ -127,9 +141,6 @@ def test_count_restart_vs_matching_semantics(spark, tmp_path):
     # purchase, and the automaton restarts AFTER the first purchase with
     # no signup left); parenthesis-matching (sequence_pair_count) pairs
     # TWO. Both pinned here so the semantic difference stays documented.
-    from clickhouse_github_log_importer_spark.plans.queries import (
-        _sequence_count_users,
-    )
     from tests.test_behavioral import _write_events
 
     rows = [
@@ -142,7 +153,7 @@ def test_count_restart_vs_matching_semantics(spark, tmp_path):
     sf = _write_events(tmp_path, rows)
     got = {
         r["user_id"]: r["seq_count"]
-        for r in _sequence_count_users(spark, sf, "(?1)(?3)").collect()
+        for r in _count_rows(spark, sf, "(?1)(?3)").collect()
     }
     assert got == {1: 1, 2: 2}
 
@@ -162,7 +173,6 @@ def test_count_composition_across_slices_matches_reference(spark, tmp_path):
     from clickhouse_github_log_importer_spark.plans.queries import (
         _SEQ_CONDS,
         _parse_seq_pattern,
-        _sequence_count_users,
     )
     from tests.test_behavioral import _write_events
 
@@ -196,18 +206,27 @@ def test_count_composition_across_slices_matches_reference(spark, tmp_path):
     for pattern in ("(?1)(?2)(?3)", "(?1)(?3)", "(?2)(?2)"):
         got = {
             r["user_id"]: r["seq_count"]
-            for r in _sequence_count_users(spark, sf, pattern).collect()
+            for r in _count_rows(spark, sf, pattern).collect()
         }
         assert got == reference(pattern), pattern
 
 
 def test_count_rejects_constrained_pattern(spark):
-    from clickhouse_github_log_importer_spark.plans.queries import (
-        _sequence_count_users,
+    # the restart DFA cannot tabulate a time edge (its state would carry
+    # a timestamp); the timed battery covers those patterns
+    from clickhouse_github_log_importer_spark.operators.sequence import (
+        _restart_dfa,
+        _sequence_count_battery_fused,
     )
+    from clickhouse_github_log_importer_spark.plans.queries import _SEQ_CONDS, t
 
     with pytest.raises(ValueError, match="restart semantics"):
-        _sequence_count_users(spark, "/root/testdata/sf0.001", "(?1)(?t<10)(?2)")
+        _sequence_count_battery_fused(
+            t(spark, "/root/testdata/sf0.001", "events"),
+            ["(?1)(?t<10)(?2)"],
+            _SEQ_CONDS,
+            dfa_of=_restart_dfa,
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -217,10 +236,6 @@ def test_count_rejects_constrained_pattern(spark):
 def test_timed_count_bound_bites(spark, tmp_path):
     # same chain with and without the bound: u1's click comes 10 s after
     # signup (bound <5 kills it); u2's comes 2 s after (bound holds).
-    from clickhouse_github_log_importer_spark.plans.queries import (
-        _sequence_count_timed_users,
-        _sequence_count_users,
-    )
     from tests.test_behavioral import _write_events
 
     S = 1_000_000
@@ -233,11 +248,11 @@ def test_timed_count_bound_bites(spark, tmp_path):
     sf = _write_events(tmp_path, rows)
     untimed = {
         r["user_id"]: r["seq_count"]
-        for r in _sequence_count_users(spark, sf, "(?1)(?2)(?3)").collect()
+        for r in _count_rows(spark, sf, "(?1)(?2)(?3)").collect()
     }
     timed = {
         r["user_id"]: r["seq_count"]
-        for r in _sequence_count_timed_users(
+        for r in _count_rows(
             spark, sf, "(?1)(?t<5)(?2)(?3)"
         ).collect()
     }
@@ -250,9 +265,6 @@ def test_timed_restart_reanchors_on_violating_event(spark, tmp_path):
     # restarts the chain AND re-anchors (its condition == condition 1),
     # so s(103) completes gap 3 < 5 -> count 1. A restart-without-
     # re-anchor rule would consume s(100) at state 0 and count 0.
-    from clickhouse_github_log_importer_spark.plans.queries import (
-        _sequence_count_timed_users,
-    )
     from tests.test_behavioral import _write_events
 
     S = 1_000_000
@@ -263,7 +275,7 @@ def test_timed_restart_reanchors_on_violating_event(spark, tmp_path):
     sf = _write_events(tmp_path, rows)
     got = {
         r["user_id"]: r["seq_count"]
-        for r in _sequence_count_timed_users(
+        for r in _count_rows(
             spark, sf, "(?1)(?t<5)(?1)"
         ).collect()
     }
@@ -277,9 +289,6 @@ def test_timed_no_reanchor_when_types_differ(spark, tmp_path):
     # the bound against t_prev=0 and restarts WITHOUT anchoring
     # (purchase != condition 1) -> count 0. Pins the deviation from a
     # backtracking matcher, which would pair c(100)->p(102).
-    from clickhouse_github_log_importer_spark.plans.queries import (
-        _sequence_count_timed_users,
-    )
     from tests.test_behavioral import _write_events
 
     S = 1_000_000
@@ -292,7 +301,7 @@ def test_timed_no_reanchor_when_types_differ(spark, tmp_path):
     sf = _write_events(tmp_path, rows)
     got = {
         r["user_id"]: r["seq_count"]
-        for r in _sequence_count_timed_users(
+        for r in _count_rows(
             spark, sf, "(?2)(?t<5)(?3)"
         ).collect()
     }
@@ -308,7 +317,6 @@ def test_timed_composition_across_slices_matches_reference(spark, tmp_path):
     from clickhouse_github_log_importer_spark.plans.queries import (
         _SEQ_CONDS,
         _parse_seq_pattern,
-        _sequence_count_timed_users,
     )
     from tests.test_behavioral import _write_events
 
@@ -370,7 +378,7 @@ def test_timed_composition_across_slices_matches_reference(spark, tmp_path):
     ):
         got = {
             r["user_id"]: r["seq_count"]
-            for r in _sequence_count_timed_users(spark, sf, pattern).collect()
+            for r in _count_rows(spark, sf, pattern).collect()
         }
         assert got == reference(pattern), pattern
 
@@ -379,9 +387,6 @@ def test_timed_exact_offset_lock_wait_restart(spark, tmp_path):
     # (r10) (?t==T) under restart semantics: the first expected event
     # with gap >= T decides — lock on equality, restart past it, wait
     # (skip) below it.
-    from clickhouse_github_log_importer_spark.plans.queries import (
-        _sequence_count_timed_users,
-    )
     from tests.test_behavioral import _write_events
 
     S = 1_000_000
@@ -401,7 +406,7 @@ def test_timed_exact_offset_lock_wait_restart(spark, tmp_path):
     sf = _write_events(tmp_path, rows)
     got = {
         r["user_id"]: r["seq_count"]
-        for r in _sequence_count_timed_users(
+        for r in _count_rows(
             spark, sf, "(?1)(?t==100)(?2)"
         ).collect()
     }
@@ -413,9 +418,6 @@ def test_timed_lower_bound_waits_not_restarts(spark, tmp_path):
     # too-early click and advances at the later one (count 1). A
     # restart-at-violating-event rule (the '<' behavior) would kill the
     # chain at c(+1h) and count 0 — this fixture discriminates.
-    from clickhouse_github_log_importer_spark.plans.queries import (
-        _sequence_count_timed_users,
-    )
     from tests.test_behavioral import _write_events
 
     S = 1_000_000
@@ -428,7 +430,7 @@ def test_timed_lower_bound_waits_not_restarts(spark, tmp_path):
     sf = _write_events(tmp_path, rows)
     got = {
         r["user_id"]: r["seq_count"]
-        for r in _sequence_count_timed_users(
+        for r in _count_rows(
             spark, sf, "(?1)(?t>43200)(?2)"
         ).collect()
     }
@@ -438,20 +440,17 @@ def test_timed_lower_bound_waits_not_restarts(spark, tmp_path):
 def test_timed_lower_bound_boundary_exact_gap(spark, tmp_path):
     # gap EXACTLY T fails '>' and passes '>=' ((?t>=T) == (?t>T-1us)
     # on integer micros)
-    from clickhouse_github_log_importer_spark.plans.queries import (
-        _sequence_count_timed_users,
-    )
     from tests.test_behavioral import _write_events
 
     S = 1_000_000
     rows = [(1, 0, 1, "signup"), (2, 43200 * S, 1, "click")]
     sf = _write_events(tmp_path, rows)
-    strict = _sequence_count_timed_users(
+    strict = _count_rows(
         spark, sf, "(?1)(?t>43200)(?2)"
     ).collect()
     inclusive = {
         r["user_id"]: r["seq_count"]
-        for r in _sequence_count_timed_users(
+        for r in _count_rows(
             spark, sf, "(?1)(?t>=43200)(?2)"
         ).collect()
     }
@@ -698,9 +697,6 @@ def test_timed_count_le_boundary_exact_gap(spark, tmp_path):
     # gap EXACTLY T: (?t<T) restarts, (?t<=T) advances — the integer-
     # microsecond reduction (<=T <=> <T+1us) at its only observable
     # boundary. u2 control sits strictly inside both bounds.
-    from clickhouse_github_log_importer_spark.plans.queries import (
-        _sequence_count_timed_users,
-    )
     from tests.test_behavioral import _write_events
 
     S = 1_000_000
@@ -713,7 +709,7 @@ def test_timed_count_le_boundary_exact_gap(spark, tmp_path):
     def counts(pattern):
         return {
             r["user_id"]: r["seq_count"]
-            for r in _sequence_count_timed_users(
+            for r in _count_rows(
                 spark, sf, pattern
             ).collect()
         }

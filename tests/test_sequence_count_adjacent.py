@@ -1,5 +1,5 @@
-"""Adjacency-aware sequenceCount (plans/queries.py: _seq_count_dfa /
-_sequence_count_adjacent_users / sequence_count_adjacent): the counting
+"""Adjacency-aware sequenceCount (operators/sequence.py: _seq_count_dfa /
+_sequence_count_battery_fused / sequence_count_adjacent): the counting
 DFA must equal a leftmost non-overlapping LAZY-regex reference on
 fuzzed streams (ClickHouse's matcher scans to the FIRST occurrence of
 the next word), blockers/KMP-fallback/non-overlap subtleties must hold
@@ -12,14 +12,23 @@ import random
 import re
 
 import pytest
+from pyspark.sql import functions as F
 
-from clickhouse_github_log_importer_spark.plans.queries import (
-    REGISTRY,
+from clickhouse_github_log_importer_spark.operators.sequence import (
     _parse_seq_pattern,
+    _restart_dfa,
     _seq_count_dfa,
-    _sequence_count_adjacent_users,
-    _sequence_count_users,
+    _sequence_count_battery_fused,
+    sequence_count,
 )
+from clickhouse_github_log_importer_spark.plans.queries import (
+    _SEQ_CONDS,
+    _SEQ_COUNT_ADJ_PATTERNS,
+    _SEQ_COUNT_PATTERNS,
+    REGISTRY,
+    t,
+)
+from clickhouse_github_log_importer_spark.plans.verify import duckdb_connection
 from tests.test_behavioral import _write_events
 
 S = 1_000_000
@@ -54,6 +63,15 @@ def _regex_count(pattern, conds, seq):
             return cnt
         cnt += 1
         pos = m.end()
+
+
+def _counts(spark, sf, pattern, conds=_SEQ_CONDS, semantics="adjacency"):
+    return {
+        r["user_id"]: r["seq_count"]
+        for r in sequence_count(
+            t(spark, sf, "events"), pattern, conds, semantics=semantics
+        ).collect()
+    }
 
 
 def test_dfa_fuzz_vs_leftmost_regex():
@@ -95,12 +113,7 @@ def test_adjacency_blocker_and_kmp_fallback(spark, tmp_path):
     sf = _write_events(tmp_path, rows)
 
     def got(pattern):
-        return {
-            r["user_id"]: r["seq_count"]
-            for r in _sequence_count_adjacent_users(
-                spark, sf, pattern, conds=conds
-            ).collect()
-        }
+        return _counts(spark, sf, pattern, conds)
 
     assert got("(?1)(?2)") == {1: 2, 3: 1, 4: 1}
     assert got("(?1)(?1)") == {4: 1, 5: 1}
@@ -111,18 +124,11 @@ def test_single_step_words_reduce_to_restart_automaton(spark, sf_smoke):
     # '(?1).*(?2)' under adjacency counting == '(?1)(?2)' under the
     # filtered-stream restart automaton (words of length 1 make the
     # DFA the same greedy chain counter)
-    adj = {
-        (r["user_id"], r["seq_count"])
-        for r in _sequence_count_adjacent_users(
-            spark, sf_smoke, "(?1).*(?2)", conds=("signup", "click")
-        ).collect()
-    }
-    base = {
-        (r["user_id"], r["seq_count"])
-        for r in _sequence_count_users(
-            spark, sf_smoke, "(?1)(?2)", conds=("signup", "click")
-        ).collect()
-    }
+    conds = ("signup", "click")
+    adj = set(_counts(spark, sf_smoke, "(?1).*(?2)", conds).items())
+    base = set(
+        _counts(spark, sf_smoke, "(?1)(?2)", conds, "existence").items()
+    )
     assert adj == base and base
 
 
@@ -140,71 +146,79 @@ def test_registry_entry_patterns(spark, sf_smoke):
 
 def test_rejects_time_edges(spark):
     with pytest.raises(ValueError, match="time-constrained"):
-        _sequence_count_adjacent_users(
-            spark, "/root/testdata/sf0.001", "(?1)(?t<10)(?2)"
+        _sequence_count_battery_fused(
+            t(spark, "/root/testdata/sf0.001", "events"),
+            ["(?1)(?t<10)(?2)"],
+            _SEQ_CONDS,
         )
 
 
 def test_library_dispatcher_adjacency(spark, sf_smoke):
-    from clickhouse_github_log_importer_spark.operators.sequence import (
-        sequence_count,
-    )
-    from clickhouse_github_log_importer_spark.plans.queries import t
-
-    ev = t(spark, sf_smoke, "events")
-    lib = {
-        (r["user_id"], r["seq_count"])
-        for r in sequence_count(
-            ev, "(?1)(?2)", ("signup", "click", "purchase"),
-            semantics="adjacency",
-        ).collect()
-    }
-    ref = {
-        (r["user_id"], r["seq_count"])
-        for r in _sequence_count_adjacent_users(
-            spark, sf_smoke, "(?1)(?2)", conds=("signup", "click", "purchase")
-        ).collect()
-    }
-    assert lib == ref
+    # the dispatcher against the leftmost lazy-regex reference run over
+    # each user's collected declared stream in (ts, event_id) order
+    conds = ("signup", "click", "purchase")
+    lib = set(_counts(spark, sf_smoke, "(?1)(?2)", conds).items())
+    seqs: dict[int, list] = {}
+    for r in (
+        t(spark, sf_smoke, "events")
+        .filter(F.col("event_type").isin(*conds))
+        .select("user_id", "ts_us", "event_id", "event_type")
+        .collect()
+    ):
+        seqs.setdefault(r["user_id"], []).append(
+            (r["ts_us"], r["event_id"], r["event_type"])
+        )
+    ref = set()
+    for u, evs in seqs.items():
+        c = _regex_count("(?1)(?2)", conds, [e for _, _, e in sorted(evs)])
+        if c:
+            ref.add((u, c))
+    assert lib == ref and ref
 
 
 def test_fused_battery_matches_per_pattern_union(spark, sf_smoke):
-    # r12: the entries run their whole pattern battery through ONE
+    # the entries run their whole pattern battery through ONE
     # block-diagonal combined DFA (one kernel pass + one fold shuffle);
-    # the stacked automata must be row-for-row identical to the
-    # per-pattern unions they replaced — for BOTH table builders
-    # (adjacency KMP DFA and the existence restart DFA)
-    from clickhouse_github_log_importer_spark.plans.queries import (
-        _SEQ_COUNT_ADJ_PATTERNS,
-        _SEQ_COUNT_PATTERNS,
-        _restart_dfa,
-        _sequence_count_battery_fused,
+    # the stacked automata must be row-for-row identical to the union of
+    # one-pattern batteries AND to the entry's DuckDB oracle (independent
+    # of the kernel) — for BOTH table builders (adjacency KMP DFA and
+    # the existence restart DFA)
+    ev = t(spark, sf_smoke, "events")
+    con = duckdb_connection(sf_smoke)
+
+    def rows(df):
+        return {
+            (r["pattern"], r["user_id"], r["seq_count"]) for r in df.collect()
+        }
+
+    fused = rows(
+        _sequence_count_battery_fused(ev, _SEQ_COUNT_ADJ_PATTERNS, _SEQ_CONDS)
     )
-
-    fused = {
-        (r["pattern"], r["user_id"], r["seq_count"])
-        for r in _sequence_count_battery_fused(
-            spark, sf_smoke, _SEQ_COUNT_ADJ_PATTERNS
-        ).collect()
-    }
-    union = {
-        (pat, r["user_id"], r["seq_count"])
-        for pat in _SEQ_COUNT_ADJ_PATTERNS
-        for r in _sequence_count_adjacent_users(
-            spark, sf_smoke, pat
-        ).collect()
-    }
+    union = set().union(
+        *(
+            rows(_sequence_count_battery_fused(ev, [pat], _SEQ_CONDS))
+            for pat in _SEQ_COUNT_ADJ_PATTERNS
+        )
+    )
     assert fused == union and fused
+    oracle = REGISTRY["sequence_count_adjacent"].oracle
+    assert fused == set(con.execute(oracle).fetchall())
 
-    fused_r = {
-        (r["pattern"], r["user_id"], r["seq_count"])
-        for r in _sequence_count_battery_fused(
-            spark, sf_smoke, _SEQ_COUNT_PATTERNS, dfa_of=_restart_dfa
-        ).collect()
-    }
-    union_r = {
-        (pat, r["user_id"], r["seq_count"])
-        for pat in _SEQ_COUNT_PATTERNS
-        for r in _sequence_count_users(spark, sf_smoke, pat).collect()
-    }
+    fused_r = rows(
+        _sequence_count_battery_fused(
+            ev, _SEQ_COUNT_PATTERNS, _SEQ_CONDS, dfa_of=_restart_dfa
+        )
+    )
+    union_r = set().union(
+        *(
+            rows(
+                _sequence_count_battery_fused(
+                    ev, [pat], _SEQ_CONDS, dfa_of=_restart_dfa
+                )
+            )
+            for pat in _SEQ_COUNT_PATTERNS
+        )
+    )
     assert fused_r == union_r and fused_r
+    oracle_r = REGISTRY["sequence_count_compiled"].oracle
+    assert fused_r == set(con.execute(oracle_r).fetchall())

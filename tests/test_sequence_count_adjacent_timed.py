@@ -1,5 +1,5 @@
 """Timed-adjacency product automaton pins
-(plans/queries.py: _sequence_count_adjacent_timed_users /
+(operators/sequence.py: _sequence_count_adjacent_timed_multi /
 sequence_count_adjacent_timed): the r9 verdict's #1 missing item —
 ClickHouse accepts sequenceCount('(?1)(?t<3600)(?2)') with adjacency
 semantics; the product of the KMP counting DFA and the timed
@@ -11,11 +11,15 @@ matches than the untimed counter when a bound does bite."""
 
 from __future__ import annotations
 
+from clickhouse_github_log_importer_spark.operators.sequence import (
+    _sequence_count_adjacent_timed_multi,
+    sequence_count,
+)
 from clickhouse_github_log_importer_spark.plans.queries import (
-    REGISTRY,
+    _SEQ_CONDS,
     _SEQ_COUNT_ADJT_PATTERNS,
-    _sequence_count_adjacent_timed_users,
-    _sequence_count_adjacent_users,
+    REGISTRY,
+    t,
 )
 from tests.test_behavioral import _write_events
 
@@ -24,10 +28,22 @@ H = 3600 * S
 
 
 def _counts(spark, sf, pattern, conds):
+    """The product automaton as a one-pattern battery (also for an
+    untimed pattern, which the dispatcher would route elsewhere)."""
     return {
         r["user_id"]: r["seq_count"]
-        for r in _sequence_count_adjacent_timed_users(
-            spark, sf, pattern, conds=conds
+        for r in _sequence_count_adjacent_timed_multi(
+            t(spark, sf, "events"), [pattern], conds
+        ).collect()
+    }
+
+
+def _untimed_counts(spark, sf, pattern):
+    return {
+        r["user_id"]: r["seq_count"]
+        for r in sequence_count(
+            t(spark, sf, "events"), pattern, _SEQ_CONDS,
+            semantics="adjacency",
         ).collect()
     }
 
@@ -119,12 +135,7 @@ def test_untimed_pattern_reduces_to_adjacent_counter(spark, sf_smoke):
             spark, sf_smoke, pat,
             ("signup", "click", "purchase", "view"),
         )
-        untimed = {
-            r["user_id"]: r["seq_count"]
-            for r in _sequence_count_adjacent_users(
-                spark, sf_smoke, pat
-            ).collect()
-        }
+        untimed = _untimed_counts(spark, sf_smoke, pat)
         assert timed == untimed, pat
 
 
@@ -141,12 +152,7 @@ def test_timed_counts_below_untimed_on_real_data(spark, sf_smoke):
         by_pat.setdefault(r["pattern"], {})[r["user_id"]] = r["seq_count"]
     for pat in _SEQ_COUNT_ADJT_PATTERNS:
         stripped = re.sub(r"\(\?t[<>=]+\d+\)", ".*", pat)
-        untimed = {
-            r["user_id"]: r["seq_count"]
-            for r in _sequence_count_adjacent_users(
-                spark, sf_smoke, stripped
-            ).collect()
-        }
+        untimed = _untimed_counts(spark, sf_smoke, stripped)
         timed = by_pat.get(pat, {})
         assert all(
             timed.get(u, 0) <= c for u, c in untimed.items()
@@ -158,29 +164,32 @@ def test_timed_counts_below_untimed_on_real_data(spark, sf_smoke):
 
 
 def test_fused_timed_battery_matches_per_pattern_union(spark, sf_smoke):
-    # r12: the entry runs the whole timed-adjacency battery through ONE
+    # the entry runs the whole timed-adjacency battery through ONE
     # shared ranked/lag subtree + ONE kernel pass + ONE (pattern, user)
-    # fold; must be row-for-row identical to the per-pattern union it
-    # replaced
-    from pyspark.sql import functions as F
-
-    from clickhouse_github_log_importer_spark.plans.queries import (
-        _SEQ_COUNT_ADJT_PATTERNS,
-        _sequence_count_adjacent_timed_multi,
-        _sequence_count_adjacent_timed_users,
+    # fold; must be row-for-row identical to the union of one-pattern
+    # batteries AND to the DuckDB oracle (independent of the kernel)
+    from clickhouse_github_log_importer_spark.plans.verify import (
+        duckdb_connection,
     )
 
+    ev = t(spark, sf_smoke, "events")
     fused = {
         (r["pattern"], r["user_id"], r["seq_count"])
         for r in _sequence_count_adjacent_timed_multi(
-            spark, sf_smoke, _SEQ_COUNT_ADJT_PATTERNS
+            ev, _SEQ_COUNT_ADJT_PATTERNS, _SEQ_CONDS
         ).collect()
     }
     union = {
         (pat, r["user_id"], r["seq_count"])
         for pat in _SEQ_COUNT_ADJT_PATTERNS
-        for r in _sequence_count_adjacent_timed_users(
-            spark, sf_smoke, pat
+        for r in _sequence_count_adjacent_timed_multi(
+            ev, [pat], _SEQ_CONDS
         ).collect()
     }
     assert fused == union and fused
+    oracle = set(
+        duckdb_connection(sf_smoke)
+        .execute(REGISTRY["sequence_count_adjacent_timed"].oracle)
+        .fetchall()
+    )
+    assert fused == oracle

@@ -4,10 +4,16 @@ at the bench scale factor — reviewable evidence that pushdown, pruning,
 broadcasts, and top-K shapes are what SCALE.md claims.
 
     python tools/dump_plans.py [sf_dir]
+
+With ``--names``, write each named entry's full formatted plan to
+``DIR/<name>.txt`` instead (before/after plan evidence for a change):
+
+    python tools/dump_plans.py [sf_dir] --names n1 n2 ... --outdir DIR
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -120,7 +126,14 @@ SELECTED = [
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+    ap = argparse.ArgumentParser()
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.1")
+    ap.add_argument("--names", nargs="+", help="entries to dump one file each")
+    ap.add_argument("--outdir", help="directory for the --names files")
+    args = ap.parse_args()
+    if bool(args.names) != bool(args.outdir):
+        ap.error("--names and --outdir go together")
+    sf_dir = args.sf_dir
     from clickhouse_github_log_importer_spark.plans.queries import REGISTRY
     from clickhouse_github_log_importer_spark.session import get_spark
 
@@ -129,6 +142,19 @@ def main() -> None:
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
+
+    def plan(name: str) -> str:
+        df = REGISTRY[name].spark(spark, sf_dir)
+        return df._jdf.queryExecution().explainString(mode)
+
+    if args.names:
+        os.makedirs(args.outdir, exist_ok=True)
+        for name in args.names:
+            path = os.path.join(args.outdir, f"{name}.txt")
+            with open(path, "w") as f:
+                f.write(plan(name))
+            print("wrote", path)
+        return
 
     out = [
         "# PLANS — physical plans of representative queries",
@@ -139,11 +165,8 @@ def main() -> None:
         "",
     ]
     for name in SELECTED:
-        spec = REGISTRY[name]
-        df = spec.spark(spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(mode)
-        tree = plan.split("\n\n")[0]
-        out += [f"## {name}", "", spec.doc, "", "```", tree, "```", ""]
+        tree = plan(name).split("\n\n")[0]
+        out += [f"## {name}", "", REGISTRY[name].doc, "", "```", tree, "```", ""]
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"PLANS.md written ({len(SELECTED)} plans)")

@@ -270,6 +270,7 @@ def main():
             best = dt if best is None else min(best, dt)
         return round(best, 3)
 
+    cpus = spark.sparkContext.defaultParallelism
     report = {}
     path = os.path.join(REPO, "SKEW_PROBE.json")
     if subset and os.path.exists(path):
@@ -303,6 +304,9 @@ def main():
             # steal% over BOTH timed variants: a high-ratio row at high
             # steal is the host, numerically (r11 bench convention)
             "steal_pct": sp,
+            # ratios shift with executor width: never compare rows
+            # measured at different cpus
+            "cpus": cpus,
         }
         if contaminated:
             report[name]["steal_contaminated"] = True
@@ -333,6 +337,7 @@ def main():
     report["_meta"] = {
         "probed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         "commit": _git_head(),
+        "cpus": cpus,
         "host_load_1m": {
             "min": round(min(loads), 1) if loads else None,
             "max": round(max(loads), 1) if loads else None,
