@@ -13,7 +13,7 @@ Layout
 ------
 - ``session``            SparkSession factory (UTC, AQE, sane shuffle sizing)
 - ``schema``             the wide GH events StructType (FieldMap parity)
-- ``operators.parsers``  P1-P11 event parsers as pure Column expressions
+- ``operators.parsers``  P1-P11 event parsers as one constant SQL projection
 - ``operators.dedup_replacing``  ReplacingMergeTree semantics (SURVEY 4.3)
 - ``operators.dedup_text``       exact / MinHash-LSH / SimHash / Jaccard dedup
 - ``operators.similarity``       cosine top-k ANN (brute force + LSH)

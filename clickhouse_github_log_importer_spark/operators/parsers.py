@@ -1,21 +1,33 @@
-"""GH Archive event parsers (P1-P11) as pure Spark Column expressions.
+"""GH Archive event parsers (P1-P11) as one constant SQL projection.
 
 The reference flattens ten GitHub event types into one wide row via
 hand-written JS parsers (``app/parser.js:13-277``, registry ``:266-277``).
-Here each parser is a dict of ``column -> Column`` expression over a raw
-frame read with an *explicit* schema (no inference — a 100 TB scan must
-never be read twice to infer types), and the whole parse layer is one
-``select`` so Catalyst sees a single projection: column pruning reaches the
-JSON scan, there is no union, no shuffle, and no Python in the hot path.
+Here each parser is a set of SQL expression strings over a raw frame read
+with an *explicit* schema (no inference — a 100 TB scan must never be read
+twice to infer types). The strings are built once, by plain Python at
+import, into :data:`KEEP` (the row filter) and :data:`PROJECTION` (one
+typed, default-filled expression per wide-table column), and the whole
+parse layer is ``raw.where(KEEP).selectExpr(*PROJECTION)``: Catalyst sees a
+single projection, so column pruning reaches the JSON scan, there is no
+union, no shuffle, and no Python in the hot path. Applying the SQL text
+costs about one py4j round trip per column per batch, where building the
+same projection from ``Column`` objects costs one per expression node
+(about 16k); and a string holds no JVM state, so it outlives any
+SparkContext or gateway.
 
 Parity notes (semantics copied from the reference, implementation is new):
 
 - Rows whose type has no parser are dropped (``app/importer_worker.js:34``).
 - Issue-family events missing both ``payload.issue`` and
   ``payload.pull_request`` are dropped (``app/parser.js:38-40``).
-- JS ``??`` defaults (``'' / 0 / false / 'NONE'``) are replicated partly
-  here and partly by ``schema.fill_defaults`` (ClickHouse implicit
-  default-fill, SURVEY 1.2).
+- The issue family reads ``issue ?? pull_request`` at struct level
+  (``app/parser.js:36``): every issue field comes from ``payload.issue``
+  when that struct is present, even where its field is null.
+- JS ``??`` defaults (``'' / 0 / false / 'NONE'``) are replicated partly in
+  the per-parser expressions and partly by the ClickHouse implicit
+  default-fill (``schema.COLUMN_DEFAULTS`` / ``ARRAY_COLUMNS``, SURVEY 1.2),
+  which is folded into each column as
+  ``coalesce(try_cast(<expr> AS <type>), <default>)``.
 - JS truthiness quirks are preserved: ``review.id > 0`` gates
   ``pull_review_id`` (``app/parser.js:132-134``), ``comment.position`` /
   ``line`` are stringified only when truthy (``app/parser.js:151,251-254``),
@@ -26,11 +38,10 @@ Parity notes (semantics copied from the reference, implementation is new):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ..schema import EVENTS_SCHEMA, EVENT_TYPES, fill_defaults
+from ..schema import ARRAY_COLUMNS, COLUMN_DEFAULTS, EVENT_TYPES, EVENTS_SCHEMA
 
 # --- raw input schema (FIXTURES.md 1; app/parser.js field reads) -------------
 
@@ -273,304 +284,321 @@ def read_raw(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     )
 
 
-def _ts(col: Column) -> Column:
-    """P13: UTC timestamp normalization (app/parser.js:6-11)."""
-    return F.to_timestamp(col)
+def _sql_type(dt: T.DataType) -> str:
+    """DDL text of ``dt``; struct field names are quoted (``default``)."""
+    if isinstance(dt, T.StructType):
+        fields = ",".join(f"`{f.name}`:{_sql_type(f.dataType)}" for f in dt.fields)
+        return f"struct<{fields}>"
+    if isinstance(dt, T.ArrayType):
+        return f"array<{_sql_type(dt.elementType)}>"
+    return dt.simpleString()
 
 
-def _when_type(types: tuple[str, ...] | str, expr: Column) -> Column:
+def _lit(v: str | int) -> str:
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return str(int(v))
+
+
+def _is_type(types: tuple[str, ...] | str) -> str:
     types = (types,) if isinstance(types, str) else types
-    return F.when(F.col("type").isin(*types), expr)
+    return f"type IN ({', '.join(map(_lit, types))})"
 
 
-def event_column_exprs() -> dict[str, Column]:
-    """All wide-table columns as expressions over the raw envelope.
+def _when_type(types: tuple[str, ...] | str, expr: str) -> str:
+    return f"CASE WHEN {_is_type(types)} THEN {expr} END"
+
+
+def _ts(expr: str) -> str:
+    """P13: UTC timestamp normalization (app/parser.js:6-11)."""
+    return f"to_timestamp({expr})"
+
+
+def _issue(field: str) -> str:
+    """issuesParser coalesce (app/parser.js:36): ``issue ?? pull_request``,
+    decided on the struct, so a present issue with a null field stays null."""
+    return (
+        f"CASE WHEN payload.issue IS NOT NULL THEN payload.issue.{field} "
+        f"ELSE payload.pull_request.{field} END"
+    )
+
+
+def _or_empty(expr: str, dt: T.DataType) -> str:
+    return f"coalesce({expr}, CAST(array() AS {_sql_type(dt)}))"
+
+
+def _transform(array: str, var: str, fields: dict[str, str]) -> str:
+    body = ", ".join(f"{_lit(n)}, {e}" for n, e in fields.items())
+    return f"transform({array}, {var} -> named_struct({body}))"
+
+
+def _column_sql() -> dict[str, str]:
+    """All wide-table columns as SQL over the raw envelope, before typing.
 
     One entry per events-table column; families gated on ``type`` so the
     whole parse layer stays a single whole-stage-codegen projection.
     """
-    payload = F.col("payload")
-    # issuesParser coalesce (app/parser.js:36): issue ?? pull_request. The
-    # payload.issue struct lacks pull-only fields, so coalesce per-family:
-    # cast the pull struct down to the issue fields for the shared columns.
-    issue_fields = [f.name for f in _ISSUE.fields]
-    pull_as_issue = F.struct(*[payload["pull_request"][n].alias(n) for n in issue_fields])
-    issue_struct = F.struct(*[payload["issue"][n].alias(n) for n in issue_fields])
-    issue = F.when(payload["issue"].isNotNull(), issue_struct).otherwise(pull_as_issue)
-    pull = payload["pull_request"]
-    comment = payload["comment"]
-    review = payload["review"]
-    release = payload["release"]
-    forkee = payload["forkee"]
+    comment = "payload.comment"
+    review = "payload.review"
+    pull = "payload.pull_request"
+    release = "payload.release"
+    forkee = "payload.forkee"
 
-    cols: dict[str, Column] = {}
+    cols: dict[str, str] = {}
 
     # P1 commonParser (app/parser.js:13-32)
-    cols["id"] = F.col("id").cast("long")
-    cols["platform"] = F.lit("GitHub")
-    cols["type"] = F.col("type")
-    cols["action"] = payload["action"]
-    cols["actor_id"] = F.col("actor.id")
-    cols["actor_login"] = F.col("actor.login")
-    cols["repo_id"] = F.col("repo.id")
-    cols["repo_name"] = F.col("repo.name")
-    cols["org_id"] = F.col("org.id")
-    cols["org_login"] = F.col("org.login")
-    cols["created_at"] = _ts(F.col("created_at"))
+    cols["id"] = "CAST(id AS bigint)"
+    cols["platform"] = "'GitHub'"
+    cols["type"] = "type"
+    cols["action"] = "payload.action"
+    cols["actor_id"] = "actor.id"
+    cols["actor_login"] = "actor.login"
+    cols["repo_id"] = "repo.id"
+    cols["repo_name"] = "repo.name"
+    cols["org_id"] = "org.id"
+    cols["org_login"] = "org.login"
+    cols["created_at"] = _ts("created_at")
 
     # P2 issuesParser (app/parser.js:34-79) — shared by the issue family
     fam = ISSUE_FAMILY
-    cols["issue_id"] = _when_type(fam, issue["id"])
-    cols["issue_number"] = _when_type(fam, issue["number"].try_cast("int"))
-    cols["issue_title"] = _when_type(fam, issue["title"])
-    labels = F.coalesce(issue["labels"], F.array().cast(_ISSUE["labels"].dataType))
-    cols["issue_labels"] = _when_type(
-        fam,
-        F.transform(
-            labels,
-            lambda l: F.struct(
-                F.coalesce(l["name"], F.lit("")).alias("name"),
-                F.coalesce(l["color"], F.lit("")).alias("color"),
-                F.coalesce(l["default"], F.lit(False)).try_cast("int").alias("default"),
-                F.coalesce(l["description"], F.lit("")).alias("description"),
-            ),
-        ),
-    )
-    cols["issue_author_id"] = _when_type(fam, issue["user"]["id"])
-    cols["issue_author_login"] = _when_type(fam, issue["user"]["login"])
-    cols["issue_author_type"] = _when_type(fam, issue["user"]["type"])
+    cols["issue_id"] = _when_type(fam, _issue("id"))
+    cols["issue_number"] = _when_type(fam, f"try_cast({_issue('number')} AS int)")
+    cols["issue_title"] = _when_type(fam, _issue("title"))
+    cols["issue_labels"] = _when_type(fam, _transform(
+        _or_empty(_issue("labels"), _ISSUE["labels"].dataType), "l", {
+            "name": "coalesce(l.name, '')",
+            "color": "coalesce(l.color, '')",
+            "default": "try_cast(coalesce(l.`default`, false) AS int)",
+            "description": "coalesce(l.description, '')",
+        }))
+    cols["issue_author_id"] = _when_type(fam, _issue("user.id"))
+    cols["issue_author_login"] = _when_type(fam, _issue("user.login"))
+    cols["issue_author_type"] = _when_type(fam, _issue("user.type"))
     cols["issue_author_association"] = _when_type(
-        fam, F.coalesce(issue["author_association"], F.lit("NONE"))
+        fam, f"coalesce({_issue('author_association')}, 'NONE')"
     )
-    cols["issue_assignee_id"] = _when_type(fam, issue["assignee"]["id"])
-    cols["issue_assignee_login"] = _when_type(fam, issue["assignee"]["login"])
-    assignees = F.coalesce(issue["assignees"], F.array().cast(_ISSUE["assignees"].dataType))
-    cols["issue_assignees"] = _when_type(
-        fam,
-        F.transform(
-            assignees,
-            lambda a: F.struct(
-                F.coalesce(a["login"], F.lit("")).alias("login"),
-                F.coalesce(a["id"], F.lit(0)).alias("id"),
-            ),
-        ),
+    cols["issue_assignee_id"] = _when_type(fam, _issue("assignee.id"))
+    cols["issue_assignee_login"] = _when_type(fam, _issue("assignee.login"))
+    cols["issue_assignees"] = _when_type(fam, _transform(
+        _or_empty(_issue("assignees"), _ISSUE["assignees"].dataType), "a", {
+            "login": "coalesce(a.login, '')",
+            "id": "coalesce(a.id, 0)",
+        }))
+    cols["issue_comments"] = _when_type(
+        fam, f"try_cast(coalesce({_issue('comments')}, 0) AS int)"
     )
-    cols["issue_comments"] = _when_type(fam, F.coalesce(issue["comments"], F.lit(0)).try_cast("int"))
-    cols["issue_created_at"] = _when_type(fam, _ts(issue["created_at"]))
-    cols["issue_updated_at"] = _when_type(fam, _ts(issue["updated_at"]))
-    cols["issue_closed_at"] = _when_type(fam, _ts(issue["closed_at"]))
+    cols["issue_created_at"] = _when_type(fam, _ts(_issue("created_at")))
+    cols["issue_updated_at"] = _when_type(fam, _ts(_issue("updated_at")))
+    cols["issue_closed_at"] = _when_type(fam, _ts(_issue("closed_at")))
     # issue_closed_by_pull_request_numbers: declared in FieldMap
     # (app/utils.ts:61) but never populated by the log parsers.
-    cols["issue_closed_by_pull_request_numbers"] = F.lit(None).cast(
-        EVENTS_SCHEMA["issue_closed_by_pull_request_numbers"].dataType
+    cols["issue_closed_by_pull_request_numbers"] = (
+        f"CAST(NULL AS {_sql_type(EVENTS_SCHEMA['issue_closed_by_pull_request_numbers'].dataType)})"
     )
 
     # body: written by five parsers with per-type sources
     # (app/parser.js:44,86,131,160,244)
     cols["body"] = (
-        F.when(F.col("type") == "IssuesEvent", F.coalesce(issue["body"], F.lit("")))
-        .when(F.col("type") == "PullRequestEvent", F.coalesce(issue["body"], F.lit("")))
-        .when(F.col("type") == "IssueCommentEvent", comment["body"])
-        .when(F.col("type") == "PullRequestReviewEvent", review["body"])
-        .when(F.col("type") == "PullRequestReviewCommentEvent", comment["body"])
-        .when(F.col("type") == "CommitCommentEvent", F.coalesce(comment["body"], F.lit("")))
+        "CASE"
+        f" WHEN type = 'IssuesEvent' THEN coalesce({_issue('body')}, '')"
+        f" WHEN type = 'PullRequestEvent' THEN coalesce({_issue('body')}, '')"
+        f" WHEN type = 'IssueCommentEvent' THEN {comment}.body"
+        f" WHEN type = 'PullRequestReviewEvent' THEN {review}.body"
+        f" WHEN type = 'PullRequestReviewCommentEvent' THEN {comment}.body"
+        f" WHEN type = 'CommitCommentEvent' THEN coalesce({comment}.body, '')"
+        " END"
     )
 
     # P3 issueCommentParser (app/parser.js:81-93)
     t = "IssueCommentEvent"
-    cols["issue_comment_id"] = _when_type(t, comment["id"])
-    cols["issue_comment_created_at"] = _when_type(t, _ts(comment["created_at"]))
-    cols["issue_comment_updated_at"] = _when_type(t, _ts(comment["updated_at"]))
-    cols["issue_comment_author_id"] = _when_type(t, comment["user"]["id"])
-    cols["issue_comment_author_login"] = _when_type(t, comment["user"]["login"])
-    cols["issue_comment_author_type"] = _when_type(t, comment["user"]["type"])
+    cols["issue_comment_id"] = _when_type(t, f"{comment}.id")
+    cols["issue_comment_created_at"] = _when_type(t, _ts(f"{comment}.created_at"))
+    cols["issue_comment_updated_at"] = _when_type(t, _ts(f"{comment}.updated_at"))
+    cols["issue_comment_author_id"] = _when_type(t, f"{comment}.user.id")
+    cols["issue_comment_author_login"] = _when_type(t, f"{comment}.user.login")
+    cols["issue_comment_author_type"] = _when_type(t, f"{comment}.user.type")
     cols["issue_comment_author_association"] = _when_type(
-        t, F.coalesce(comment["author_association"], F.lit("NONE"))
+        t, f"coalesce({comment}.author_association, 'NONE')"
     )
 
     # P4 pullRequestParser (app/parser.js:95-126) — pull family
     pf = PULL_FAMILY
-    cols["pull_commits"] = _when_type(pf, F.coalesce(pull["commits"], F.lit(0)).try_cast("int"))
-    cols["pull_additions"] = _when_type(pf, F.coalesce(pull["additions"], F.lit(0)).try_cast("int"))
-    cols["pull_deletions"] = _when_type(pf, F.coalesce(pull["deletions"], F.lit(0)).try_cast("int"))
-    cols["pull_changed_files"] = _when_type(
-        pf, F.coalesce(pull["changed_files"], F.lit(0)).try_cast("int")
-    )
-    cols["pull_merged"] = _when_type(
-        pf, F.coalesce(pull["merged"], F.lit(False)).try_cast("int")
-    )
-    cols["pull_merge_commit_sha"] = _when_type(
-        pf, F.coalesce(pull["merge_commit_sha"], F.lit(""))
-    )
-    cols["pull_merged_at"] = _when_type(pf, _ts(pull["merged_at"]))
-    cols["pull_merged_by_id"] = _when_type(pf, pull["merged_by"]["id"])
-    cols["pull_merged_by_login"] = _when_type(pf, pull["merged_by"]["login"])
-    cols["pull_merged_by_type"] = _when_type(pf, pull["merged_by"]["type"])
+    for col, field in (("pull_commits", "commits"), ("pull_additions", "additions"),
+                       ("pull_deletions", "deletions"),
+                       ("pull_changed_files", "changed_files")):
+        cols[col] = _when_type(pf, f"try_cast(coalesce({pull}.{field}, 0) AS int)")
+    cols["pull_merged"] = _when_type(pf, f"try_cast(coalesce({pull}.merged, false) AS int)")
+    cols["pull_merge_commit_sha"] = _when_type(pf, f"coalesce({pull}.merge_commit_sha, '')")
+    cols["pull_merged_at"] = _when_type(pf, _ts(f"{pull}.merged_at"))
+    cols["pull_merged_by_id"] = _when_type(pf, f"{pull}.merged_by.id")
+    cols["pull_merged_by_login"] = _when_type(pf, f"{pull}.merged_by.login")
+    cols["pull_merged_by_type"] = _when_type(pf, f"{pull}.merged_by.type")
     # first requested reviewer only (app/parser.js:98)
-    reviewer = F.element_at(pull["requested_reviewers"], 1)
-    cols["pull_requested_reviewer_id"] = _when_type(pf, reviewer["id"])
-    cols["pull_requested_reviewer_login"] = _when_type(pf, reviewer["login"])
-    cols["pull_requested_reviewer_type"] = _when_type(pf, reviewer["type"])
+    reviewer = f"element_at({pull}.requested_reviewers, 1)"
+    cols["pull_requested_reviewer_id"] = _when_type(pf, f"{reviewer}.id")
+    cols["pull_requested_reviewer_login"] = _when_type(pf, f"{reviewer}.login")
+    cols["pull_requested_reviewer_type"] = _when_type(pf, f"{reviewer}.type")
     cols["pull_review_comments"] = _when_type(
-        pf, F.coalesce(pull["review_comments"], F.lit(0)).try_cast("int")
+        pf, f"try_cast(coalesce({pull}.review_comments, 0) AS int)"
     )
-    cols["pull_base_ref"] = _when_type(pf, pull["base"]["ref"])
-    cols["pull_head_repo_id"] = _when_type(
-        pf, F.coalesce(pull["head"]["repo"]["id"], F.lit(0))
-    )
-    cols["pull_head_repo_name"] = _when_type(
-        pf, F.coalesce(pull["head"]["repo"]["full_name"], F.lit(""))
-    )
-    cols["pull_head_ref"] = _when_type(pf, pull["head"]["ref"])
+    cols["pull_base_ref"] = _when_type(pf, f"{pull}.base.ref")
+    cols["pull_head_repo_id"] = _when_type(pf, f"coalesce({pull}.head.repo.id, 0)")
+    cols["pull_head_repo_name"] = _when_type(pf, f"coalesce({pull}.head.repo.full_name, '')")
+    cols["pull_head_ref"] = _when_type(pf, f"{pull}.head.ref")
 
     # P5 pullRequestReviewParser (app/parser.js:128-138): review.id gated >0
     # P6 pullRequestReviewCommentParser (:140-167): comment.pull_request_review_id gated >0
     cols["pull_review_id"] = (
-        F.when(
-            (F.col("type") == "PullRequestReviewEvent") & (review["id"] > 0), review["id"]
-        ).when(
-            (F.col("type") == "PullRequestReviewCommentEvent")
-            & (comment["pull_request_review_id"] > 0),
-            comment["pull_request_review_id"],
-        )
+        "CASE"
+        f" WHEN type = 'PullRequestReviewEvent' AND {review}.id > 0 THEN {review}.id"
+        f" WHEN type = 'PullRequestReviewCommentEvent'"
+        f" AND {comment}.pull_request_review_id > 0"
+        f" THEN {comment}.pull_request_review_id"
+        " END"
     )
-    cols["pull_review_state"] = _when_type("PullRequestReviewEvent", review["state"])
+    cols["pull_review_state"] = _when_type("PullRequestReviewEvent", f"{review}.state")
     cols["pull_review_author_association"] = _when_type(
-        "PullRequestReviewEvent", F.coalesce(review["author_association"], F.lit("NONE"))
+        "PullRequestReviewEvent", f"coalesce({review}.author_association, 'NONE')"
     )
     t = "PullRequestReviewCommentEvent"
-    cols["pull_review_comment_id"] = _when_type(t, comment["id"])
-    cols["pull_review_comment_path"] = _when_type(t, comment["path"])
+    cols["pull_review_comment_id"] = _when_type(t, f"{comment}.id")
+    cols["pull_review_comment_path"] = _when_type(t, f"{comment}.path")
     # JS truthiness: position 0 is omitted -> '' (app/parser.js:150-152)
     cols["pull_review_comment_position"] = _when_type(
-        t, F.when(comment["position"] > 0, comment["position"].cast("string"))
+        t, f"CASE WHEN {comment}.position > 0 THEN CAST({comment}.position AS string) END"
     )
-    cols["pull_review_comment_author_id"] = _when_type(t, comment["user"]["id"])
-    cols["pull_review_comment_author_login"] = _when_type(t, comment["user"]["login"])
-    cols["pull_review_comment_author_type"] = _when_type(t, comment["user"]["type"])
+    cols["pull_review_comment_author_id"] = _when_type(t, f"{comment}.user.id")
+    cols["pull_review_comment_author_login"] = _when_type(t, f"{comment}.user.login")
+    cols["pull_review_comment_author_type"] = _when_type(t, f"{comment}.user.type")
     cols["pull_review_comment_author_association"] = _when_type(
-        t, F.coalesce(comment["author_association"], F.lit("NONE"))
+        t, f"coalesce({comment}.author_association, 'NONE')"
     )
-    cols["pull_review_comment_created_at"] = _when_type(t, _ts(comment["created_at"]))
-    cols["pull_review_comment_updated_at"] = _when_type(t, _ts(comment["updated_at"]))
+    cols["pull_review_comment_created_at"] = _when_type(t, _ts(f"{comment}.created_at"))
+    cols["pull_review_comment_updated_at"] = _when_type(t, _ts(f"{comment}.updated_at"))
 
     # P7 pushParser (app/parser.js:169-183)
     t = "PushEvent"
-    cols["push_id"] = _when_type(t, payload["push_id"])
-    cols["push_size"] = _when_type(t, payload["size"].try_cast("int"))
-    cols["push_distinct_size"] = _when_type(t, payload["distinct_size"].try_cast("int"))
-    cols["push_ref"] = _when_type(t, payload["ref"])
-    cols["push_head"] = _when_type(t, payload["head"])
-    commits = F.coalesce(payload["commits"], F.array().cast(_PAYLOAD["commits"].dataType))
-    cols["push_commits"] = _when_type(
-        t,
-        F.transform(
-            commits,
-            lambda c: F.struct(
-                F.coalesce(c["author"]["name"], F.lit("")).alias("name"),
-                F.coalesce(c["author"]["email"], F.lit("")).alias("email"),
-                F.coalesce(c["message"], F.lit("")).alias("message"),
-            ),
-        ),
-    )
+    cols["push_id"] = _when_type(t, "payload.push_id")
+    cols["push_size"] = _when_type(t, "try_cast(payload.size AS int)")
+    cols["push_distinct_size"] = _when_type(t, "try_cast(payload.distinct_size AS int)")
+    cols["push_ref"] = _when_type(t, "payload.ref")
+    cols["push_head"] = _when_type(t, "payload.head")
+    cols["push_commits"] = _when_type(t, _transform(
+        _or_empty("payload.commits", _PAYLOAD["commits"].dataType), "c", {
+            "name": "coalesce(c.author.name, '')",
+            "email": "coalesce(c.author.email, '')",
+            "message": "coalesce(c.message, '')",
+        }))
 
     # P8 forkParser (app/parser.js:185-196)
     t = "ForkEvent"
-    cols["fork_forkee_id"] = _when_type(t, forkee["id"])
-    cols["fork_forkee_full_name"] = _when_type(t, forkee["full_name"])
-    cols["fork_forkee_owner_id"] = _when_type(t, forkee["owner"]["id"])
-    cols["fork_forkee_owner_login"] = _when_type(t, forkee["owner"]["login"])
-    cols["fork_forkee_owner_type"] = _when_type(t, forkee["owner"]["type"])
+    cols["fork_forkee_id"] = _when_type(t, f"{forkee}.id")
+    cols["fork_forkee_full_name"] = _when_type(t, f"{forkee}.full_name")
+    cols["fork_forkee_owner_id"] = _when_type(t, f"{forkee}.owner.id")
+    cols["fork_forkee_owner_login"] = _when_type(t, f"{forkee}.owner.login")
+    cols["fork_forkee_owner_type"] = _when_type(t, f"{forkee}.owner.type")
 
     # P9 watchParser (app/parser.js:198-200): envelope only — nothing extra.
 
     # P10 releaseParser (app/parser.js:202-234)
     t = "ReleaseEvent"
-    cols["release_id"] = _when_type(t, release["id"])
-    cols["release_tag_name"] = _when_type(t, F.coalesce(release["tag_name"], F.lit("")))
-    cols["release_target_commitish"] = _when_type(t, release["target_commitish"])
-    cols["release_name"] = _when_type(t, F.coalesce(release["name"], F.lit("")))
-    cols["release_draft"] = _when_type(t, release["draft"].try_cast("int"))
-    cols["release_author_id"] = _when_type(t, release["author"]["id"])
-    cols["release_author_login"] = _when_type(t, release["author"]["login"])
-    cols["release_author_type"] = _when_type(t, release["author"]["type"])
-    cols["release_prerelease"] = _when_type(t, release["prerelease"].try_cast("int"))
-    cols["release_created_at"] = _when_type(t, _ts(release["created_at"]))
-    cols["release_published_at"] = _when_type(t, _ts(release["published_at"]))
-    cols["release_body"] = _when_type(t, F.coalesce(release["body"], F.lit("")))
-    assets = F.coalesce(release["assets"], F.array().cast(_RELEASE["assets"].dataType))
-    cols["release_assets"] = _when_type(
-        t,
-        F.transform(
-            assets,
-            lambda a: F.struct(
-                F.coalesce(a["name"], F.lit("")).alias("name"),
-                F.coalesce(a["uploader"]["login"], F.lit("")).alias("uploader_login"),
-                F.coalesce(a["uploader"]["id"], F.lit(0)).alias("uploader_id"),
-                F.coalesce(a["content_type"], F.lit("")).alias("content_type"),
-                F.coalesce(a["state"], F.lit("")).alias("state"),
-                F.coalesce(a["size"], F.lit(0)).alias("size"),
-                F.coalesce(a["download_count"], F.lit(0)).try_cast("int").alias("download_count"),
-            ),
-        ),
-    )
+    cols["release_id"] = _when_type(t, f"{release}.id")
+    cols["release_tag_name"] = _when_type(t, f"coalesce({release}.tag_name, '')")
+    cols["release_target_commitish"] = _when_type(t, f"{release}.target_commitish")
+    cols["release_name"] = _when_type(t, f"coalesce({release}.name, '')")
+    cols["release_draft"] = _when_type(t, f"try_cast({release}.draft AS int)")
+    cols["release_author_id"] = _when_type(t, f"{release}.author.id")
+    cols["release_author_login"] = _when_type(t, f"{release}.author.login")
+    cols["release_author_type"] = _when_type(t, f"{release}.author.type")
+    cols["release_prerelease"] = _when_type(t, f"try_cast({release}.prerelease AS int)")
+    cols["release_created_at"] = _when_type(t, _ts(f"{release}.created_at"))
+    cols["release_published_at"] = _when_type(t, _ts(f"{release}.published_at"))
+    cols["release_body"] = _when_type(t, f"coalesce({release}.body, '')")
+    cols["release_assets"] = _when_type(t, _transform(
+        _or_empty(f"{release}.assets", _RELEASE["assets"].dataType), "a", {
+            "name": "coalesce(a.name, '')",
+            "uploader_login": "coalesce(a.uploader.login, '')",
+            "uploader_id": "coalesce(a.uploader.id, 0)",
+            "content_type": "coalesce(a.content_type, '')",
+            "state": "coalesce(a.state, '')",
+            "size": "coalesce(a.size, 0)",
+            "download_count": "try_cast(coalesce(a.download_count, 0) AS int)",
+        }))
 
     # P11 commitCommentParser (app/parser.js:236-264)
     t = "CommitCommentEvent"
-    cols["commit_comment_id"] = _when_type(t, comment["id"])
-    cols["commit_comment_author_id"] = _when_type(t, comment["user"]["id"])
-    cols["commit_comment_author_login"] = _when_type(t, comment["user"]["login"])
-    cols["commit_comment_author_type"] = _when_type(t, comment["user"]["type"])
+    cols["commit_comment_id"] = _when_type(t, f"{comment}.id")
+    cols["commit_comment_author_id"] = _when_type(t, f"{comment}.user.id")
+    cols["commit_comment_author_login"] = _when_type(t, f"{comment}.user.login")
+    cols["commit_comment_author_type"] = _when_type(t, f"{comment}.user.type")
     cols["commit_comment_author_association"] = _when_type(
-        t, F.coalesce(comment["author_association"], F.lit("NONE"))
+        t, f"coalesce({comment}.author_association, 'NONE')"
     )
-    cols["commit_comment_path"] = _when_type(t, comment["path"])
+    cols["commit_comment_path"] = _when_type(t, f"{comment}.path")
     cols["commit_comment_position"] = _when_type(
-        t, F.when(comment["position"] > 0, comment["position"].cast("string"))
+        t, f"CASE WHEN {comment}.position > 0 THEN CAST({comment}.position AS string) END"
     )
     cols["commit_comment_line"] = _when_type(
-        t, F.when(comment["line"] > 0, comment["line"].cast("string"))
+        t, f"CASE WHEN {comment}.line > 0 THEN CAST({comment}.line AS string) END"
     )
-    cols["commit_comment_sha"] = _when_type(t, comment["commit_id"])
-    cols["commit_comment_created_at"] = _when_type(t, _ts(comment["created_at"]))
-    cols["commit_comment_updated_at"] = _when_type(t, _ts(comment["updated_at"]))
+    cols["commit_comment_sha"] = _when_type(t, f"{comment}.commit_id")
+    cols["commit_comment_created_at"] = _when_type(t, _ts(f"{comment}.created_at"))
+    cols["commit_comment_updated_at"] = _when_type(t, _ts(f"{comment}.updated_at"))
 
-    cols["from_api"] = F.lit(0)  # log-sourced (app/importer_worker.js:35)
+    cols["from_api"] = "0"  # log-sourced (app/importer_worker.js:35)
     return cols
+
+
+def _typed(field: T.StructField, expr: str) -> str:
+    """``expr`` cast to the column type with the ClickHouse default folded in.
+
+    try_cast: a malformed record (e.g. out-of-int-range number) nulls the
+    field (then default-fills) instead of killing the task under ANSI mode
+    — per-line tolerance like the reference.
+    """
+    sql = f"try_cast({expr} AS {_sql_type(field.dataType)})"
+    if field.name in COLUMN_DEFAULTS:
+        sql = f"coalesce({sql}, {_lit(COLUMN_DEFAULTS[field.name])})"
+    elif field.name in ARRAY_COLUMNS:
+        # from_json, not CAST(array() ...): it is nullable, so the column
+        # keeps the nullable schema that schema.fill_defaults gives Gitee rows
+        sql = f"coalesce({sql}, from_json('[]', {_lit(_sql_type(field.dataType))}))"
+    return f"{sql} AS {field.name}"
+
+
+#: rows the parse layer keeps: S4 tolerant parse skips bad lines, P12
+#: event-type filter, and issue-family rows need an issue or a pull request
+#: (app/parser.js:38-40)
+KEEP = (
+    f"_corrupt_record IS NULL AND {_is_type(EVENT_TYPES)}"
+    f" AND NOT ({_is_type(ISSUE_FAMILY)}"
+    " AND payload.issue IS NULL AND payload.pull_request IS NULL)"
+)
+
+_COLUMNS = _column_sql()
+#: partition column: toYYYYMM(created_at) (app/service/log_importer.ts:124),
+#: over the raw envelope
+CREATED_MONTH = (
+    f"try_cast(date_format(try_cast({_COLUMNS['created_at']} AS timestamp), 'yyyyMM') AS int)"
+)
+#: the wide events frame: every EVENTS_SCHEMA column, then created_month
+PROJECTION: tuple[str, ...] = (
+    *(_typed(f, _COLUMNS[f.name]) for f in EVENTS_SCHEMA.fields),
+    f"{CREATED_MONTH} AS created_month",
+)
+_FROM_API = EVENTS_SCHEMA.fieldNames().index("from_api")
 
 
 def project_events(raw: DataFrame, from_api: int = 0) -> DataFrame:
     """The full parse layer: raw envelope -> wide events frame.
 
-    Single projection + two filters; equivalent of the reference's
-    per-line ``ParseFuncMap.get(type)(item)`` loop
-    (``app/importer_worker.js:31-40``) but columnar, codegen'd, and
-    parallel per input file.
+    One filter and one projection; equivalent of the reference's per-line
+    ``ParseFuncMap.get(type)(item)`` loop (``app/importer_worker.js:31-40``)
+    but columnar, codegen'd, and parallel per input file. ``from_api``
+    swaps only the version literal (1 for API-sourced rows).
     """
-    issue_missing = (
-        F.col("type").isin(*ISSUE_FAMILY)
-        & F.col("payload.issue").isNull()
-        & F.col("payload.pull_request").isNull()
-    )
-    filtered = raw.filter(
-        F.col("_corrupt_record").isNull()  # S4 tolerant parse: skip bad lines
-        & F.col("type").isin(*EVENT_TYPES)  # P12 event-type filter
-        & ~issue_missing  # app/parser.js:38-40
-    )
-    exprs = event_column_exprs()
-    wide = filtered.select(
-        *[
-            # try_cast: a malformed record (e.g. out-of-int-range number)
-            # nulls the field (then default-fills) instead of killing the
-            # task under ANSI mode — per-line tolerance like the reference
-            exprs[f.name].try_cast(f.dataType).alias(f.name)
-            for f in EVENTS_SCHEMA.fields
-        ]
-    )
+    projection = PROJECTION
     if from_api:
-        wide = wide.withColumn("from_api", F.lit(int(from_api)))
-    filled = fill_defaults(wide)
-    # partition column: toYYYYMM(created_at) (app/service/log_importer.ts:124)
-    return filled.withColumn(
-        "created_month", F.date_format("created_at", "yyyyMM").try_cast("int")
-    )
+        api = _typed(EVENTS_SCHEMA["from_api"], _lit(from_api))
+        projection = (*PROJECTION[:_FROM_API], api, *PROJECTION[_FROM_API + 1:])
+    return raw.where(KEEP).selectExpr(*projection)

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup_replacing import compact, replacing_dedup
-from ..operators.parsers import project_events, read_raw
+from ..operators.parsers import CREATED_MONTH, KEEP, project_events, read_raw
 from ..sources.gharchive import check_existing, check_validity, download_missing
 from ..sources.manifest import FileStatus, Manifest
 
@@ -78,7 +78,7 @@ def import_verified(
     data_dir: str,
     table_path: str,
     batch_files: int = 256,
-) -> int:
+) -> tuple[int, int, list[int]]:
     """logImporter.import (app/service/log_importer.ts:12-99).
 
     Reads all Verified files as ONE Spark job (a non-splittable gzip file
@@ -87,6 +87,10 @@ def import_verified(
     partitions. Commit protocol: manifest statuses flip to Imported only
     after the write succeeds; a crash between write and manifest save is
     healed by reconcile() + ReplacingMergeTree dedup (idempotent re-import).
+
+    Returns ``(n_files, n_corrupt, months)``: the files imported, the
+    lines the permissive reader could not parse, and the sorted distinct
+    ``created_month`` values of the rows written.
     """
     todo = manifest.keys_with(FileStatus.Verified)[:batch_files]
     if not todo:
@@ -96,27 +100,28 @@ def import_verified(
     # are ONLY `_corrupt_record` (QUERY_ONLY_CORRUPT_RECORD_COLUMN) unless the
     # parse result is materialized first. The cache is bounded — one ingest
     # batch of hourly files, not the corpus — and is reused by both the write
-    # and the quarantine count, so the gzip files are decompressed once.
+    # and the batch summary, so the gzip files are decompressed once.
     raw = read_raw(spark, paths).cache()
     try:
-        events = project_events(raw)
         (
-            events.write.mode("append")
+            project_events(raw).write.mode("append")
             .partitionBy("created_month")
             .parquet(table_path)
         )
-        # row-level quarantine accounting (T5 at line granularity): lines the
-        # permissive reader could not parse were skipped by project_events;
-        # surface the count in the status document (importFail analog).
-        n_corrupt = raw.filter(F.col("_corrupt_record").isNotNull()).count()
-        # partitions touched by this batch, FROM THE DATA (an hourly file
-        # can carry rows of other months — late events); feeds the
-        # compaction cadence so only dirtied months ever rewrite
-        months = sorted(
-            r[0]
-            for r in events.select("created_month").distinct().collect()
-            if r[0] is not None
-        )
+        # One job over the cached batch for both figures:
+        # - row-level quarantine accounting (T5 at line granularity): lines
+        #   the permissive reader could not parse were skipped by
+        #   project_events; the count goes to the status document
+        #   (importFail analog);
+        # - partitions touched by this batch, FROM THE DATA (an hourly file
+        #   can carry rows of other months — late events), over the rows
+        #   project_events kept; feeds the compaction cadence so only
+        #   dirtied months ever rewrite.
+        n_corrupt, months = raw.selectExpr(
+            "count_if(_corrupt_record IS NOT NULL)",
+            f"collect_set({CREATED_MONTH}) FILTER (WHERE {KEEP})",
+        ).first()
+        months = sorted(months)
     finally:
         raw.unpersist()
     for k in todo:

@@ -125,3 +125,26 @@ def test_commit_comment(parsed):
 
 def test_partition_column(parsed):
     assert parsed[113]["created_month"] == 201502
+
+
+@pytest.mark.parametrize("from_api", [0, 1])
+def test_projection_py4j_budget(spark, tmp_path, monkeypatch, from_api):
+    # the parse layer is constant SQL text: building it for a batch is a
+    # handful of py4j round trips, not one per expression node (~16.5k)
+    from py4j.clientserver import ClientServerConnection
+
+    path = str(tmp_path / "2015-01-01-15.json.gz")
+    write_gz(path, events())
+    raw = read_raw(spark, path)
+    send = ClientServerConnection.send_command
+    calls = 0
+
+    def counting(self, *args, **kwargs):
+        nonlocal calls
+        calls += 1
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    project_events(raw, from_api=from_api)
+    monkeypatch.undo()
+    assert 0 < calls <= 300, calls

@@ -21,7 +21,7 @@ from clickhouse_github_log_importer_spark.streaming.pipeline import (
     run_incremental,
 )
 
-from .fixtures import events, write_gz
+from .fixtures import _env, events, write_gz
 
 
 def test_hourly_file_list():
@@ -184,7 +184,14 @@ def test_corrupt_lines_counted_in_status(spark, tmp_path):
 
     data_dir = str(tmp_path / "data")
     rel = "2015/01/01/2015-01-01-15.json.gz"
-    write_gz(os.path.join(data_dir, rel), events(), corrupt_lines=0)
+    # rows the parse layer drops mark no month: a type with no parser and
+    # an issue-family row with neither issue nor pull request, each in a
+    # month no kept row has
+    dropped = [
+        _env(200, "GollumEvent", {"pages": []}, created="2015-03-04T10:00:00Z"),
+        _env(201, "IssuesEvent", {"action": "opened"}, created="2015-04-04T10:00:00Z"),
+    ]
+    write_gz(os.path.join(data_dir, rel), events() + dropped, corrupt_lines=0)
     meta = str(tmp_path / "meta.json")
     m = Manifest(meta)
     m.ensure([rel])

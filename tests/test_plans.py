@@ -12,8 +12,7 @@ import pytest
 from clickhouse_github_log_importer_spark.plans.queries import REGISTRY
 
 
-@pytest.fixture(autouse=True)
-def _pristine_plan_state(spark):
+def _reset_plan_state(spark):
     """Plan-shape assertions must not depend on test order: a cached
     relation leaked by an earlier test rewrites `Scan parquet` into
     `InMemoryTableScan`, and a leaked conf flips join strategies. Clear
@@ -21,6 +20,11 @@ def _pristine_plan_state(spark):
     spark.catalog.clearCache()
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+
+@pytest.fixture(autouse=True)
+def _pristine_plan_state(spark):
+    _reset_plan_state(spark)
     yield
 
 
@@ -112,23 +116,31 @@ DECLARED_ARROW = (
 )
 
 
-def test_no_python_in_hot_paths(spark, sf_smoke):
+@pytest.fixture(scope="module")
+def registry_plans(spark, sf_smoke) -> dict[str, str]:
+    """Every registry entry's formatted explain, built once for the scans
+    below (built at module scope, so it resets the plan state itself)."""
+    _reset_plan_state(spark)
+    return {name: explain(spark, name, sf_smoke) for name in sorted(REGISTRY)}
+
+
+def test_no_python_in_hot_paths(registry_plans):
     # every query except the declared Arrow paths must stay JVM-side
     # (no row-at-a-time or batched Python eval anywhere)
     for name in sorted(REGISTRY):
         if name.startswith(DECLARED_ARROW):
             continue
-        p = explain(spark, name, sf_smoke)
+        p = registry_plans[name]
         assert "BatchEvalPython" not in p, name
         assert "ArrowEvalPython" not in p, name
         assert "MapInPandas" not in p, name
 
 
-def test_no_row_python_anywhere(spark, sf_smoke):
+def test_no_row_python_anywhere(registry_plans):
     # even the declared Arrow paths must never fall back to row-at-a-time
     # Python eval
     for name in sorted(REGISTRY):
-        p = explain(spark, name, sf_smoke)
+        p = registry_plans[name]
         assert "BatchEvalPython" not in p, name
 
 

@@ -10,7 +10,7 @@ itself out of every ratio. No Spark session is needed here."""
 
 from __future__ import annotations
 
-from tools.scale_probe import cal_ratio, waves
+from tools.scale_probe import cal_ratio, ratio_fields, waves
 
 
 def test_k_within_cpus_is_one_wave():
@@ -40,3 +40,20 @@ def test_cal_ratio_keeps_real_width_slowdown_and_floors_at_one():
     assert cal_ratio(cal, 10, 30) == 2.0
     assert cal_ratio({10: 2.0, 30: 1.0}, 10, 30) == 1.0
     assert cal_ratio({30: 1.0}, 10, 30) == 1.0
+
+
+def test_row_stores_the_cal_ratio_its_caladj_was_divided_by():
+    # a later subset run replaces the top-level calibration, so each row
+    # carries its own divisor; the identity must hold on the stored
+    # (rounded, JSON round-tripped) values
+    import json
+
+    cal = {1: 1.3, 10: 1.37, 30: 2.11}
+    for t10, t30 in ((3.02, 6.33), (16.05, 37.25), (0.41, 0.97), (9.74, 22.31)):
+        row = json.loads(json.dumps(ratio_fields(t10, t30, cal, 10, 30)))
+        assert row["cal_ratio"] == round(cal_ratio(cal, 10, 30), 4)
+        assert row["ratio_hi"] == round(t30 / t10, 2)
+        assert row["ratio_hi_caladj"] == round(row["ratio_hi"] / row["cal_ratio"], 2)
+    # no width slowdown: the divisor is 1 and the adjusted ratio is raw
+    flat = ratio_fields(3.0, 9.0, {10: 2.0, 30: 1.5}, 10, 30)
+    assert flat["cal_ratio"] == 1.0 and flat["ratio_hi_caladj"] == flat["ratio_hi"] == 3.0

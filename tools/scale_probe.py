@@ -118,6 +118,18 @@ def cal_ratio(cal: dict[int, float], k_lo: int, k_hi: int) -> float:
     return max(1.0, cal[k_hi] / cal[k_lo]) if cal.get(k_lo) else 1.0
 
 
+def ratio_fields(t_lo: float, t_hi: float, cal: dict[int, float],
+                 k_lo: int, k_hi: int) -> dict[str, float]:
+    """A row's top-interval growth ratio, the calibration ratio it is
+    divided by, and the quotient. The row stores the divisor, so
+    ``ratio_hi_caladj == round(ratio_hi / cal_ratio, 2)`` re-derives from
+    the file whatever calibration a later run leaves at the top level."""
+    ratio_hi = round(t_hi / t_lo, 2)
+    cr = round(cal_ratio(cal, k_lo, k_hi), 4)
+    return {"ratio_hi": ratio_hi, "cal_ratio": cr,
+            "ratio_hi_caladj": round(ratio_hi / cr, 2)}
+
+
 def _clear_model_memos():
     from clickhouse_github_log_importer_spark.plans.dataops import (
         clear_model_memos,
@@ -358,7 +370,8 @@ def run_probe(scales, names, repeats: int = 2) -> dict:
         # divide out the box's measured wave-width slowdown (cal): a
         # query whose wall is one k-task wave inflates by cal[k3]/cal[k2]
         # on identical per-task work, which is the machine, not the plan
-        ratio_adj = ratio / cal_ratio(cal, k2, k3)
+        ratios = ratio_fields(ts[k2], ts[k3], cal, k2, k3)
+        ratio_adj = ratio / ratios["cal_ratio"]
         if ratio_adj > lin * 1.35 and ts[k3] > 1.0:
             verdict = "super-linear"
         elif ratio < lin * 0.65:
@@ -374,8 +387,7 @@ def run_probe(scales, names, repeats: int = 2) -> dict:
                 else {}
             ),
             "marginal_sec_per_unit": [round(m1, 4), round(m2, 4)],
-            "ratio_hi": round(ts[k3] / ts[k2], 2),
-            "ratio_hi_caladj": round(ratio_adj, 2),
+            **ratios,
             "verdict": verdict,
             # model-memo policy: "cleared-per-repeat" rows time the fit;
             # "warm" rows time apply with the fitted model resident
